@@ -25,9 +25,10 @@ Cross-engine exactness design (the whole point of this layout):
 
 Shuffle budget per Lloyd iteration (the 100 TB shape):
 
-- Assignment is a PURE PROJECTION: the k centroids are collapsed into a
-  single-row array and broadcast, and the argmin is a per-row
-  ``aggregate`` fold over that array — zero shuffle, stays in codegen.
+- Assignment is row-local, zero shuffle: the k centroids reach every
+  task (collected and shipped with the fit's Arrow kernel, or broadcast
+  as one packed row for the ``assign_clusters`` fold) and the argmin
+  runs per row.
 - The update is one ``posexplode`` + ``groupBy(cid, pos)`` — n*dim rows
   partially aggregated map-side down to k*dim per task, so the exchange
   carries ~k*dim*tasks rows, not data-sized.
@@ -106,19 +107,8 @@ def _centroid_state(assigned: DataFrame) -> DataFrame:
     )
 
 
-# Historical routing threshold (r11-r14): Lloyd assignment used to
-# switch from the interpreted JVM fold to the BLAS-vectorized Arrow
-# kernel at this centroid count. Since optimization r15 ``kmeans_fit``
-# defaults EVERY batch fit to the kernel, so the constant routes
-# nothing — it survives only as a test parameter (the kernel==fold
-# parity suite pins both sides of the old boundary) and as the mirrored
-# comment in similarity.py. Both paths remain bit-identical by
-# construction (see _assign_clusters_vectorized).
-VECTORIZED_ASSIGN_MIN_K = 32
-
-
 def _assign_clusters_vectorized(qv: DataFrame, centroids: DataFrame, k_bound: int) -> DataFrame:
-    """The large-k assignment path: exact integer moments in numpy.
+    """The fit's assignment kernel: exact integer moments in numpy.
 
     Bit-identical to the fold in :func:`assign_clusters`:
 
@@ -170,7 +160,8 @@ def _assign_clusters_vectorized(qv: DataFrame, centroids: DataFrame, k_bound: in
 
         for pdf in batches:
             if len(pdf) == 0:
-                yield pd.DataFrame({"vec_id": [], "qarr": [], "cid": []})
+                # output need not be 1:1 with batches; an empty frame
+                # would carry no dtypes for the Arrow cast
                 continue
             q = np.array(pdf["qarr"].tolist(), dtype=np.int64)  # b x d
             a = (q * q).sum(axis=1).astype(np.float64)
@@ -193,14 +184,10 @@ def assign_clusters(qv: DataFrame, centroids: DataFrame) -> DataFrame:
     breaks distance ties toward the lowest cid (mirrors the oracle's
     ``ORDER BY d, cid``).
 
-    This fold stays INTERPRETED (higher-order functions never enter
-    codegen), so its cost is O(n*k*d) interpreted ops at any k.
-    ``kmeans_fit`` defaults every batch fit to the bit-identical
-    :func:`_assign_clusters_vectorized` matmul kernel instead (r15); the
-    fold remains as the executable documentation of the distance math,
-    the parity test's reference, and the form for callers that must stay
-    collect-free (the kernel pulls the k-row centroid relation to the
-    driver).
+    The fold is interpreted (higher-order functions never enter
+    codegen): O(n*k*d) interpreted ops, but no driver collect — the
+    packed centroid row resolves lazily as a broadcast. ``kmeans_fit``
+    uses the bit-identical :func:`_assign_clusters_vectorized` kernel.
     """
     packed = centroids.agg(
         F.array_sort(F.collect_list(F.struct("cid", "sarr", "n", "ss"))).alias("cents")
@@ -221,34 +208,11 @@ def assign_clusters(qv: DataFrame, centroids: DataFrame) -> DataFrame:
     return with_a.select("vec_id", "qarr", best["cid"].alias("cid"))
 
 
-def assign_cells(
-    qv: DataFrame, centroids: DataFrame, k_bound: int | None = None
-) -> DataFrame:
-    """(vec_id, cid): public assignment-only entry for consumers that
-    never read ``qarr`` back (ADVICE r15 — q_drift_cells-style direct
-    passes that fit on one slice and assign the whole corpus once).
-
-    Default (``k_bound=None``) routes through the declarative fold, not
-    the Arrow kernel: a DIRECT pass scans its input exactly once, so the
-    kernel's eager k-row centroid collect is one extra serialized driver
-    job before the main query — inside a fit that job is amortized (the
-    collected state also feeds the next Lloyd round), in a direct pass
-    it is pure added latency. The fold form instead resolves the packed
-    centroid row lazily as a broadcast subquery of the main job.
-    Measured on q_drift_cells at sf0.1 (r16 in-session A/B, min-of-3
-    x2): fold 1.68 s vs kernel 2.16 s vs kernel-with-qarr-dropped
-    1.83 s — the fold wins at the k=8 direct shape, and both paths are
-    bit-identical (tests/test_round11_semdedup.py).
-
-    Pass ``k_bound`` (the true k) to opt into the kernel for
-    corpus-sized direct passes at large k, where the O(n*k*d)
-    interpreted fold dominates the one collect job; the kernel output is
-    projected to (vec_id, cid) so ``qarr`` never crosses the Arrow
-    boundary outbound."""
-    if k_bound is not None:
-        return _assign_clusters_vectorized(qv, centroids, k_bound).select(
-            "vec_id", "cid"
-        )
+def assign_cells(qv: DataFrame, centroids: DataFrame) -> DataFrame:
+    """(vec_id, cid): assignment-only entry for direct passes that never
+    read ``qarr`` back (fit on one slice, assign the corpus once).
+    Runs the :func:`assign_clusters` fold: one lazy plan, no driver
+    collect, O(n*k*d) interpreted ops."""
     return assign_clusters(qv, centroids).select("vec_id", "cid")
 
 
@@ -258,7 +222,6 @@ def kmeans_fit(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized_assign: bool | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Run ``iters`` Lloyd iterations; return (assignments, centroids).
 
@@ -270,27 +233,13 @@ def kmeans_fit(
     sparse. A cluster that loses all members drops out (standard Lloyd
     degeneracy — inner joins on both engines agree).
 
-    The loop builds one lazy plan; centroid subtrees are k rows, so plan
-    growth is the only cost of staying fully declarative. For deep
-    iteration counts persist the (tiny) centroid state per round.
-
-    ``vectorized_assign`` (default: True) routes each assignment through
-    the bit-identical matmul kernel: the interpreted fold is O(n*k*d)
-    interpreted ops per pass at ANY k (and measured superlinear at
-    k ~ sqrt(n) — slope 1.16 on the SemDeDup scaled-k curve), while the
-    kernel is one BLAS matmul per Arrow batch. Results are identical
-    either way (pinned by ``tests/test_round11_semdedup.py``), and the
-    r15 in-session A/B showed the kernel >= the fold at small k too
-    (q_kmeans 1.05 -> 0.83 s sf0.1, q_semdedup 4.23 -> 3.83 s sf0.5),
-    so the kernel is now the default for every batch fit; pass
-    ``vectorized_assign=False`` for the fully declarative fold (kept as
-    the executable documentation of the distance math and the parity
-    test's reference).
+    Each iteration assigns through :func:`_assign_clusters_vectorized`
+    (one k-row driver collect, then one matmul per Arrow batch) and
+    updates the k-row centroid state with one narrow exchange; the
+    final assignment is materialized once.
     """
     if iters < 1:
         raise ValueError(f"kmeans_fit requires iters >= 1, got {iters}")
-    if vectorized_assign is None:
-        vectorized_assign = True
     qv = quantize(embeddings, id_col, vec_col)
     seeds = qv.orderBy("vec_id").limit(k)
     # each centroid state is k rows but is referenced by every later
@@ -302,22 +251,13 @@ def kmeans_fit(
     ).cache()
     assigned = None
     for it in range(iters):
-        if vectorized_assign:
-            assigned = _assign_clusters_vectorized(qv, centroids, k_bound=k)
-        else:
-            assigned = assign_clusters(qv, centroids)
+        assigned = _assign_clusters_vectorized(qv, centroids, k_bound=k)
         if it == iters - 1:
-            # the FINAL assignment pass used to execute twice — once
-            # filling the last centroid cache, once more for whichever
-            # consumer reads ``assigned`` (the centroid cache holds k
-            # rows, not the assignment) — and the O(n*k*d) interpreted
-            # fold is the dominant per-row cost of every fit
-            # (optimization r15). Materialize it once; the final
-            # centroid state and every consumer read the materialized
-            # rows. This is the same relation semantic_dedup already
-            # checkpointed (and materialize_ivf_pq_index persists);
-            # on a real cluster prefer a reliable-storage checkpoint
-            # for long-lived consumers.
+            # materialize the final assignment once: the last centroid
+            # state and every consumer of ``assigned`` read these rows
+            # instead of re-running the assignment pass. On a real
+            # cluster prefer a reliable-storage checkpoint for
+            # long-lived consumers.
             assigned = assigned.localCheckpoint(eager=True)
         centroids = _centroid_state(assigned).cache()
     return assigned, centroids

@@ -11,13 +11,12 @@ a pair at Hamming distance <= 3 shares at least one full band
 (pigeonhole), so candidates come from an equi-join on (band_idx,
 band_value) — never an all-pairs scan.
 
-Two tiers, mirroring the repo's multimodal contract:
+Two inputs, mirroring the repo's multimodal contract:
 
-- :func:`ahash_band_table` — pure JVM column expressions over a
-  raster whose pixels are the document text's code points (the
-  established "text bytes stand in for a media blob" convention,
-  q_binary_meta) — fully oracle-replayable in SQL, and the banding /
-  verify math is the production one.
+- :func:`ahash_band_table` — a raster whose pixels are the document
+  text's code points (the established "text bytes stand in for a media
+  blob" convention, q_binary_meta) — fully oracle-replayable in SQL,
+  and the banding / verify math is the production one.
 - :func:`ahash64` / :func:`image_ahash_kernel` — the same hash over
   REAL decoded pixels (numpy, from operators/codecs decode_png etc.),
   for the mapInPandas kernel tier where actual media lives; undecodable
@@ -45,125 +44,15 @@ N_BANDS = 4
 BITS_PER_BAND = N_BLOCKS // N_BANDS
 
 
-def raster_pixels(text: Column) -> Column:
-    """The deterministic stand-in raster as array<bigint>: the text's
-    code points TILED (text + ' ', repeated) to exactly SIDE*SIDE chars
-    — row-major 8-bit-ish pixels. Tiling is the resize step of real
-    aHash: it fills the grid with signal at every document length
-    (space-PADDING instead leaves short docs 95% blank, every block
-    mean collapses to the pad value, and all documents collide — 124k
-    of 124k possible pairs matched in that form). SIDE=32 (16-pixel
-    blocks) beats 64 on this corpus on BOTH axes: more per-block
-    variance makes the bits more discriminative (373/500 case-folded
-    siblings matched with zero false pairs, vs 212 with false pairs at
-    64), at 4x less per-row work. The text is split into a char array
-    in ONE O(n) pass (``split(s, '')`` == DuckDB ``string_split(s,
-    '')``) so every later pixel access is an O(1) element_at — a
-    char-indexed substr per pixel would re-scan the UTF-8 string per
-    call."""
-    s = F.concat(text, F.lit(" "))
-    reps = (F.floor(F.lit(SIDE * SIDE) / F.length(s)) + 1).cast("int")
-    tiled = F.substring(F.repeat(s, reps), 1, SIDE * SIDE)
-    return F.transform(F.split(tiled, ""), lambda c: F.ascii(c).cast("bigint"))
-
-
-# block (R=b DIV GRID, C=b%GRID) spans pixel rows BH*R..BH*R+BH-1, cols
-# BH*C..; the pixel index map is FIXED given (SIDE, GRID), so it is a
-# 64x(BH*BH) literal the optimizer constant-folds — the hot per-pixel
-# lambda then costs one element_at + one add instead of eight index-
-# arithmetic nodes per iteration (higher-order functions evaluate
-# interpreted, so node count IS the cost model)
-_BLOCK_PIXEL_IDX = [
-    [
-        (b // GRID) * (BH * SIDE)
-        + (j // BH) * SIDE
-        + (b % GRID) * BH
-        + (j % BH)
-        + 1
-        for j in range(BH * BH)
-    ]
-    for b in range(N_BLOCKS)
-]
-
-
-def _block_sums(px: Column) -> Column:
-    """array<bigint> of N_BLOCKS block pixel sums over the pixel array.
-    Row-local; each pixel is read exactly once, every read O(1)."""
-    idx = F.array(
-        *[
-            F.array(*[F.lit(i).cast("int") for i in row])
-            for row in _BLOCK_PIXEL_IDX
-        ]
-    )
-    return F.transform(
-        idx,
-        lambda idxs: F.aggregate(
-            idxs,
-            F.lit(0).cast("bigint"),
-            lambda acc, i: acc + F.element_at(px, i),
-        ),
-    )
-
-
-def _bands_from_sums(sums: Column, total: Column | None = None) -> Column:
-    """N_BANDS 16-bit band values from the block-sum array. bit b = 1
-    iff N_BLOCKS * block_sum_b >= total_sum (exact integer form of
-    block_mean >= global_mean — every block has the same pixel count,
-    so the comparison needs no division). Pass ``total`` as a staged
-    attribute when calling per-row: referenced inside the bit lambda,
-    an inline aggregate would re-sum the 64 block sums once per BIT."""
-    if total is None:
-        total = F.aggregate(
-            sums, F.lit(0).cast("bigint"), lambda acc, x: acc + x
-        )
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
-        lambda t: F.aggregate(
-            F.sequence(F.lit(0), F.lit(BITS_PER_BAND - 1)),
-            F.lit(0).cast("bigint"),
-            lambda acc, u: acc
-            + F.when(
-                F.lit(N_BLOCKS)
-                * F.element_at(sums, (t * BITS_PER_BAND + u + 1).cast("int"))
-                >= total,
-                F.pow(F.lit(2), u).cast("bigint"),
-            ).otherwise(F.lit(0).cast("bigint")),
-        ),
-    )
-
-
-def _pin(dep: Column, value: Column) -> Column:
-    """Make ``value`` reference ``dep`` a SECOND (free) time so
-    CollapseProject's duplicate-expensive-expression guard
-    (SPARK-36718: never inline a non-cheap producer referenced more
-    than once) keeps the producing projection as its own stage. Without
-    the pin, a producer referenced once — even when that one reference
-    sits inside a higher-order function's lambda — is inlined INTO the
-    lambda body and re-evaluated on every lambda iteration: the O(pixels)
-    raster under the per-block aggregate became 16M+ ops per row, a measured
-    10-minute stall at 500 rows. The ``otherwise`` branch is
-    unreachable (size >= 0 always holds for a non-null array)."""
-    return F.when(F.size(dep) >= 0, value).otherwise(F.lit(None))
-
-
 def _text_band_kernel(
     src: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
-    """(__id, __bands) via one vectorized numpy pass per Arrow batch —
-    the BATCH tier of :func:`ahash_band_table` (optimization r15).
-
-    The expression tier evaluates the raster/block-sum/threshold
-    pipeline as higher-order functions, which are CodegenFallback and
-    run INTERPRETED per element — ~2.6 s of the 3.5 s q_ahash_dedup
-    noop at bench sf0.1 was this per-pixel lambda walk (SIDE*SIDE
-    element reads + 64 block folds per row). Here the same integers
-    run as one (n, SIDE, SIDE) block-sum reshape + one threshold
-    matmul per batch; only the tiling codepoint map stays per-row
-    (``_tiled_codepoints`` — the function the PNG kernel tier already
-    shares so its hashes replay in the SQL oracle). Bit-identical to
-    the expression tier by construction and pinned by
-    tests/test_round15_ahash_kernel.py; NULL text yields NULL bands in
-    both."""
+    """(__id, __bands) via one vectorized numpy pass per Arrow batch,
+    batch or streaming. Per batch: one (n, SIDE, SIDE) block-sum
+    reshape and one threshold pass; only the tiling codepoint map
+    (:func:`_tiled_codepoints`) runs per row, O(SIDE*SIDE). Equal to
+    ``bands_of(ahash64(raster))`` over the tiled raster; NULL text
+    yields NULL bands."""
     import pandas as pd
 
     id_type = src.schema[id_col].dataType.simpleString()
@@ -208,21 +97,9 @@ def _text_band_kernel(
 def ahash_band_table(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(__id, __bands) per document. BATCH inputs route through the
-    vectorized Arrow kernel tier (:func:`_text_band_kernel` — the
-    interpreted per-pixel expression walk was the dominant CPU term of
-    every consumer, see its docstring); STREAMING inputs keep the pure
-    expression tier below, whose plan shape the r14 fused-filter gates
-    pin. Both tiers are bit-identical (property-pinned).
-
-    Expression tier: the raster, the block sums and the
-    band values are STAGED as separate projections — Catalyst has no
-    common-subexpression elimination inside an expression tree, so each
-    stage's input must be a per-row ATTRIBUTE (evaluated once), never an
-    inlined expression; :func:`_pin` holds the stage boundary where the
-    consumer's syntactic reference count alone would let CollapseProject
-    merge. Per-row cost is O(pixels): one split pass, SIDE*SIDE O(1)
-    element_at reads, 64 threshold tests."""
+    """(__id, __bands) per document, batch or streaming, through
+    :func:`_text_band_kernel`. Row-local apart from one adaptive
+    repartition of under-split BATCH inputs."""
     # hashing is CPU-dense per row, so its parallelism must come from an
     # explicit exchange when the SCAN can't provide it (one compact
     # parquet file = one core otherwise — the near_dup_pairs lesson).
@@ -237,44 +114,7 @@ def ahash_band_table(
         want = _probe_partitions(docs)
         if docs.rdd.getNumPartitions() < want:
             src = docs.repartition(want, F.col(id_col))
-        return _text_band_kernel(src, id_col, text_col)
-    return _expression_band_table(src, id_col, text_col)
-
-
-def _expression_band_table(
-    src: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """The pure-expression band tier (the streaming path; plan-gated by
-    test_ahash_band_table_stays_staged). Apply parallelism correction
-    upstream — this function only stages the hash pipeline."""
-    px = src.select(
-        F.col(id_col).alias("__id"),
-        raster_pixels(F.col(text_col)).alias("__px"),
-    )
-    sums = px.select(
-        "__id", _pin(F.col("__px"), _block_sums(F.col("__px"))).alias("__bs")
-    )
-    # total staged as its own attribute (and pinned): inlined, the
-    # 64-element sum would re-run once per bit inside the band lambda
-    tot = sums.select(
-        "__id",
-        "__bs",
-        _pin(
-            F.col("__bs"),
-            F.aggregate(
-                F.col("__bs"), F.lit(0).cast("bigint"), lambda a, x: a + x
-            ),
-        ).alias("__tot"),
-    )
-    # the outer when() re-references BOTH __bs and __tot so neither
-    # producer collapses into the band lambda (same guard as _pin)
-    return tot.select(
-        "__id",
-        F.when(
-            (F.size(F.col("__bs")) >= 0) & F.col("__tot").isNotNull(),
-            _bands_from_sums(F.col("__bs"), F.col("__tot")),
-        ).alias("__bands"),
-    )
+    return _text_band_kernel(src, id_col, text_col)
 
 
 def hamming_from_bands(a: Column, b: Column) -> Column:
@@ -312,14 +152,9 @@ def ahash_pairs(
     matches" is a post-join column predicate, replacing a
     candidate-wide distinct() exchange (the largest intermediate in
     the query at corpus scale; same trick as simhash_near_pairs)."""
-    # The checkpoint is load-bearing, not an optimization knob: the
-    # band-keyed self-join makes the optimizer infer isnotnull /
-    # size()>0 predicates over the join keys and SUBSTITUTE them down
-    # through the projections into per-scan-row filters — each carrying
-    # the whole inlined px->sums->bands pipeline with the multiplied
-    # lambda evaluation _pin exists to prevent (measured: >10 min for
-    # 1000 docs; with the barrier: seconds). The materialized relation
-    # is (id, 4 ints) per image — tiny next to the media it indexes.
+    # The checkpoint materializes the hashed relation once, before the
+    # band-keyed self-join reads it from both sides. It is (id, 4 ints)
+    # per image — tiny next to the media it indexes.
     hashed = ahash_band_table(docs, id_col=id_col, text_col=text_col)
     hashed = hashed.localCheckpoint(eager=True)
     return pairs_from_band_table(hashed, max_hamming=max_hamming)
@@ -411,8 +246,8 @@ def pairs_from_band_table(
 ) -> DataFrame:
     """(doc_a, doc_b, hamming) within ``max_hamming`` from a prepared
     (__id, __bands) table — the banded candidate join + verify shared by
-    the expression tier (:func:`ahash_pairs`) and the real-pixel kernel
-    tier (:func:`media_near_dup`). ``hashed`` should be checkpointed/
+    the text-raster path (:func:`ahash_pairs`) and the real-pixel
+    kernel path (:func:`media_near_dup`). ``hashed`` should be checkpointed/
     materialized by the caller (it is tiny: id + 4 ints per image).
 
     Two-tier candidate generation (round-10 skew fix). A band value
@@ -860,7 +695,7 @@ def ahash64(pixels) -> int:
 
 def bands_of(hash64: int) -> list[int]:
     """Split a 64-bit aHash into N_BANDS 16-bit band values (LSB-first,
-    matching :func:`ahash_bands`)."""
+    matching :func:`_text_band_kernel`)."""
     return [
         (hash64 >> (t * BITS_PER_BAND)) & ((1 << BITS_PER_BAND) - 1)
         for t in range(N_BANDS)
@@ -910,9 +745,10 @@ def image_ahash_kernel(
 
 def _tiled_codepoints(text: str):
     """numpy int64 codepoints of the text tiled to SIDE*SIDE chars —
-    the EXACT tiling of :func:`raster_pixels` (s = text + ' ';
-    repeat(s, 1024 // len(s) + 1)[:1024]), shared by the PNG corpus
-    kernel so its decoded-pixel hashes replay in the SQL oracle."""
+    the EXACT tiling of the SQL oracle's ``_AHASH_CORE`` raster
+    (queries/profiling.py: s = text + ' '; repeat(s, 1024 // len(s) +
+    1)[:1024]), shared by the text and PNG corpus kernels so their
+    hashes replay in the oracle."""
     import numpy as np
 
     s = text + " "

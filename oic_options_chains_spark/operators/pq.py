@@ -159,6 +159,16 @@ def _pack_codebooks(codebooks: DataFrame, n_sub: int) -> DataFrame:
     )
 
 
+# Float64 error budget of the kernel's screening score
+# f = a - 2b/n + ss/n^2, in ulps (u = 2**-53) of M = |a| + |2b/n| +
+# |ss/n^2|: a -> float64 costs 1, 2b/n costs 2 (convert b, divide),
+# ss/n^2 costs 3 (convert ss, square n, divide), and each of the two
+# additions costs 1. The error bound doubles that first-order sum to
+# cover the second-order terms and the rounding of M and f_min + eps.
+_SCREEN_TERM_ULPS = 1 + 2 + 3 + 1 + 1
+_SCREEN_ERR_REL = 2 * _SCREEN_TERM_ULPS * 2.0**-53
+
+
 def _assign_codes_vectorized(
     qv: DataFrame,
     codebooks: DataFrame,
@@ -166,33 +176,21 @@ def _assign_codes_vectorized(
     sub_dim: int,
     k_bound: int,
 ) -> DataFrame:
-    """The Arrow path for PQ code assignment (optimization r16,
-    VERDICT r15 item 8): bit-identical to the ``_argmin_code`` fold.
-
-    The fold is the family's most expensive per-row expression — an
-    INTERPRETED decimal(38,0) cross-multiplied argmin over n_sub * k_sub
-    cells per row (measured 0.62 s per assignment pass at bench sf0.1,
-    and every fit runs ``iters`` passes). The exact comparator cannot
-    run in int64 (num ~ a*n^2 + ss overflows at corpus-sized n, and the
-    cross-product num_i * nn_j squares that), so the kernel uses a
-    FLOAT64 SCREEN WITH AN EXACT FALLBACK:
+    """The Arrow path for PQ code assignment: bit-identical to the
+    ``_argmin_code`` fold. The exact comparator overflows int64 at
+    corpus-sized n, so the kernel uses a FLOAT64 SCREEN WITH AN EXACT
+    FALLBACK:
 
     - per subspace, a = sum(q^2) and b = q . sarr are exact int64
       matmuls (same legal range as the JVM bigint fold);
-    - the screening score f = a - 2b/n + ss/n^2 is float64 — each term
-      correctly rounded, total error provably under ~2^-48 of the
-      summed magnitudes M;
-    - every cell with f <= f_min + 1e-12 * M_row (thousands of ulps of
-      slack, so the true rational argmin can never be screened out) is
-      re-compared EXACTLY in arbitrary-precision Python ints with the
-      fold's strict-< / earlier-cid-wins rule. On real data the screen
-      keeps one cell and the exact path never runs; exact ties resolve
-      identically to the fold.
+    - the screening score f = a - 2b/n + ss/n^2 is float64, within
+      ``_SCREEN_ERR_REL * M`` of its exact value;
+    - every cell within twice that bound of the screened minimum is
+      re-compared EXACTLY in Python ints with the fold's strict-< /
+      earlier-cid-wins rule, so exact ties resolve like the fold.
 
-    Parity is pinned by tests/test_round16_pq_kernel.py (kernel == fold
-    over the registry corpora, plus adversarial exact-tie fixtures).
-    The codebook collect is k_bound-guarded (raise, not assert) and
-    amortized inside fits exactly like the coarse kernel's."""
+    Runs a driver collect of the codebooks when called, guarded at
+    ``n_sub * k_bound`` rows (raise, not assert)."""
     from pyspark.sql.types import (
         ArrayType,
         IntegerType,
@@ -248,7 +246,8 @@ def _assign_codes_vectorized(
 
         for pdf in batches:
             if len(pdf) == 0:
-                yield pd.DataFrame({"vec_id": [], "qarr": [], "codes": []})
+                # output need not be 1:1 with batches; an empty frame
+                # would carry no dtypes for the Arrow cast
                 continue
             qm = np.array(pdf["qarr"].tolist(), dtype=np.int64)
             nrows = len(pdf)
@@ -265,7 +264,12 @@ def _assign_codes_vectorized(
                 mag = (
                     af[:, None] + np.abs(t2) + cb["ssn_f"][None, :]
                 )
-                eps = 1e-12 * mag.max(axis=1)
+                err = _SCREEN_ERR_REL * mag.max(axis=1)
+                # the computed minimum and the true argmin each sit
+                # within err of their exact scores, so a slack of
+                # 2 * err keeps the true argmin (and its exact ties)
+                # among the candidates
+                eps = 2.0 * err
                 cand_count = (f <= (fmin + eps)[:, None]).sum(axis=1)
                 for i in np.nonzero(cand_count > 1)[0]:
                     cand = np.nonzero(f[i] <= fmin[i] + eps[i])[0]
@@ -299,25 +303,18 @@ def assign_codes(
     codebooks: DataFrame,
     n_sub: int,
     sub_dim: int,
-    vectorized: bool | None = None,
     k_bound: int | None = None,
 ) -> DataFrame:
     """(vec_id, qarr, codes): every vector's n_sub nearest sub-centroid
     ids.
 
-    Default routes through the float64-screened exact Arrow kernel
-    (``_assign_codes_vectorized``, optimization r16) when ``k_bound``
-    is known — the interpreted decimal argmin fold costs 0.62 s per
-    pass at bench sf0.1 and runs ``iters`` times per fit. Pass
-    ``vectorized=False`` (or omit ``k_bound``) for the declarative
-    broadcast-fold projection — zero shuffle and zero driver collect,
-    kept as the executable documentation of the exact comparator and
-    the parity test's reference."""
-    if vectorized is None:
-        vectorized = k_bound is not None
-    if vectorized:
-        if k_bound is None:
-            raise ValueError("vectorized assign_codes requires k_bound")
+    With ``k_bound`` (the true k_sub) this runs the Arrow kernel
+    (:func:`_assign_codes_vectorized`), which runs a driver collect of
+    the n_sub * k_sub codebook rows when ``assign_codes`` is called.
+    With ``k_bound=None`` it is the lazy broadcast-fold projection:
+    zero shuffle, no collect, an interpreted decimal argmin per row.
+    Both give identical codes."""
+    if k_bound is not None:
         return _assign_codes_vectorized(qv, codebooks, n_sub, sub_dim, k_bound)
     packed = _pack_codebooks(codebooks, n_sub)
     with_books = qv.crossJoin(F.broadcast(packed))
@@ -360,18 +357,15 @@ def _pq_fit_qv(
     k_sub: int,
     iters: int,
     sub_dim: int = 8,
-    vectorized_assign: bool | None = None,
+    # the kernel is the fit default: its per-iteration codebook collect
+    # is negligible (n_sub x k_sub rows), and the screened-exact argmin
+    # replaces the most expensive interpreted expression in the family
+    vectorized_assign: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     # iters=0 would fall through the update loop with coded=None and
     # crash downstream callers (ivf_pq_topk) far from the cause
     if iters < 1:
         raise ValueError(f"pq_fit requires iters >= 1, got {iters}")
-    if vectorized_assign is None:
-        # the kernel is the fit default (optimization r16, the r15
-        # kmeans_fit precedent): the codebook collect amortizes across
-        # iterations, and the screened-exact argmin replaces the most
-        # expensive interpreted expression in the family
-        vectorized_assign = True
     seeds = qv.orderBy("vec_id").limit(k_sub)
     seed_long = seeds.select(
         "vec_id",
@@ -390,7 +384,6 @@ def _pq_fit_qv(
             codebooks,
             n_sub,
             sub_dim,
-            vectorized=vectorized_assign,
             k_bound=k_sub if vectorized_assign else None,
         )
         if it == iters - 1:

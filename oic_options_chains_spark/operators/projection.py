@@ -9,12 +9,12 @@ This module is the deterministic, oracle-replayable form:
 - vectors are quantized to integers (floor(x * 4096), the same
   convention as the kNN-graph L2, operators/graph._l2_int) so every
   engine computes identical sums;
-- the projection matrix is never materialized: entry sign(i, k) is
-  md5("i:k") parity — any engine regenerates the same matrix from the
-  formula, a 100 TB-friendly property (nothing to broadcast, nothing to
-  version);
-- the whole projection is a per-row transform/aggregate (no shuffle,
-  no UDF): out[k] = Σ_i q[i] * s(i, k).
+- the projection matrix is never shipped: entry sign(i, k) is
+  md5("i:k") parity — any engine (and every task) regenerates the same
+  matrix from the formula, a 100 TB-friendly property (nothing to
+  broadcast, nothing to version);
+- the whole projection is row-local (no shuffle): out[k] =
+  Σ_i q[i] * s(i, k), one int64 matmul per Arrow batch.
 
 The norm-preservation audit (Σ_k out_k² vs d' · Σ_i q_i², in basis
 points) is the quality gate: E[ratio] = 10000 under JL, and a column of
@@ -28,18 +28,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _sign(i: Column, k: Column) -> Column:
-    """±1 from the md5 parity of "i:k" — the regenerable JL matrix."""
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", i.cast("string"), k.cast("string"))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("bigint")
-    return F.when(h % 2 == 0, F.lit(1)).otherwise(F.lit(-1)).cast("bigint")
-
-
 def quantized(vec: Column) -> Column:
     """floor(x * 4096) per component, as bigint."""
     return F.transform(
@@ -48,7 +36,7 @@ def quantized(vec: Column) -> Column:
 
 
 def _sign_py(i: int, k: int) -> int:
-    """Driver-side twin of :func:`_sign` — same md5 parity formula."""
+    """±1 from the md5 parity of "i:k" — the regenerable JL matrix."""
     import hashlib
 
     h = int(hashlib.md5(f"{i}:{k}".encode()).hexdigest()[:8], 16)
@@ -56,29 +44,20 @@ def _sign_py(i: int, k: int) -> int:
 
 
 def _jl_kernel(
-    df: DataFrame, vec_col: str, out_dim: int, in_dim: int
+    df: DataFrame, vec_col: str, out_dim: int, in_dim: int | None
 ) -> DataFrame:
-    """All input columns plus ``proj``/``norm_ratio_bp`` via ONE numpy
-    int64 matmul per Arrow batch — the BATCH tier of :func:`jl_project`
-    (optimization r15, the ``_pair_l2_kernel``/``_text_band_kernel``
-    family).
+    """All input columns plus ``proj``/``norm_ratio_bp`` via one numpy
+    int64 matmul per Arrow batch and row width.
 
-    The expression tier evaluates ``out_dim`` ``zip_with``+``aggregate``
-    folds per row — higher-order functions are CodegenFallback, so the
-    whole d x d' multiply-add ran INTERPRETED per element. Here the
-    quantization is one vectorized floor (same IEEE double multiply,
-    bit-identical), the projection is ``qa @ S`` with the d x d' sign
-    matrix built once per task from the same md5 parity
-    (:func:`_sign_py`), and the norm audit is two int64 row sums plus a
-    floor division (numerator/denominator both non-negative, so numpy
-    ``//`` == Spark ``div`` truncation). All values stay far inside
-    int64 (|q| <= 4096 * |x|, d * (4096 * |x|)^2 << 2^63 for unit-scale
-    embeddings), so the kernel is bit-identical to the fold — pinned by
-    tests/test_round15_jl_kernel.py. NULL vectors yield NULL
-    proj/norm_ratio_bp in both tiers; a width mismatch and a zero-norm
-    vector raise in both (the expression tier via raise_error resp.
-    ANSI division-by-zero)."""
-    import pandas as pd
+    Quantization is one vectorized floor(x * 4096); the projection is
+    ``qa @ S`` with the width x ``out_dim`` sign matrix built in the
+    task from :func:`_sign_py`, once per row width it sees. The norm
+    audit is two int64 row sums plus a floor division (both sides
+    non-negative, so numpy ``//`` == SQL ``DIV``). Values stay far
+    inside int64 for unit-scale embeddings. NULL vectors yield NULL
+    ``proj``/``norm_ratio_bp``; a zero-norm quantized vector raises,
+    and so does a width other than ``in_dim`` when ``in_dim`` is
+    given."""
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     schema = StructType(
@@ -88,32 +67,35 @@ def _jl_kernel(
             StructField("norm_ratio_bp", LongType()),
         ]
     )
-    sign_rows = [
-        [_sign_py(i, k) for k in range(out_dim)] for i in range(in_dim)
-    ]
 
     def run(batches):
         import numpy as np
 
-        s_mat = np.array(sign_rows, dtype=np.int64)
+        sign_mats: dict[int, np.ndarray] = {}
         for pdf in batches:
             n = len(pdf)
             proj_out: list = [None] * n
             norm_out: list = [None] * n
             vecs = pdf[vec_col]
-            live = [j for j in range(n) if vecs.iloc[j] is not None]
-            if live:
-                widths = {len(vecs.iloc[j]) for j in live}
-                if widths != {in_dim}:
-                    bad = next(w for w in widths if w != in_dim)
+            by_width: dict[int, list[int]] = {}
+            for j in range(n):
+                if vecs.iloc[j] is not None:
+                    by_width.setdefault(len(vecs.iloc[j]), []).append(j)
+            for width, rows in by_width.items():
+                if in_dim is not None and width != in_dim:
                     raise ValueError(
-                        f"jl_project: {vec_col} width {bad} != in_dim {in_dim}"
+                        f"jl_project: {vec_col} width {width} != in_dim {in_dim}"
                     )
+                if width not in sign_mats:
+                    sign_mats[width] = np.array(
+                        [[_sign_py(i, k) for k in range(out_dim)] for i in range(width)],
+                        dtype=np.int64,
+                    ).reshape(width, out_dim)
                 arr = np.array(
-                    [vecs.iloc[j] for j in live], dtype=np.float64
-                )
+                    [vecs.iloc[j] for j in rows], dtype=np.float64
+                ).reshape(len(rows), width)
                 qa = np.floor(arr * 4096.0).astype(np.int64)
-                pj = qa @ s_mat
+                pj = qa @ sign_mats[width]
                 num = 10000 * (pj * pj).sum(axis=1)
                 den = out_dim * (qa * qa).sum(axis=1)
                 if (den == 0).any():
@@ -122,7 +104,7 @@ def _jl_kernel(
                         "(division by zero in norm audit)"
                     )
                 ratio = num // den
-                for idx, j in enumerate(live):
+                for idx, j in enumerate(rows):
                     proj_out[j] = [int(x) for x in pj[idx]]
                     norm_out[j] = int(ratio[idx])
             out = pdf.copy()
@@ -140,126 +122,10 @@ def jl_project(
     in_dim: int | None = None,
 ) -> DataFrame:
     """All input columns plus ``proj`` (array<bigint>, length
-    ``out_dim``) and ``norm_ratio_bp`` (bigint). Row-local: zero
-    exchanges added to the input plan.
+    ``out_dim``) and ``norm_ratio_bp`` (bigint), batch or streaming.
+    Row-local: zero exchanges added to the input plan; per-row cost is
+    O(width x ``out_dim``) integer multiply-adds.
 
-    When ``in_dim`` is known, the d x d' sign matrix is generated ON
-    THE DRIVER from the same md5 formula and inlined as literals — the
-    matrix is a few KB, and recomputing md5 per (i, k) per ROW costs
-    ~3 ms/row at d=64, d'=16 (measured), three orders of magnitude
-    more than the multiply-adds it gates. ``in_dim=None`` falls back
-    to the in-expression md5 for unknown-width inputs.
-
-    The literal-matrix branch RAISES on a width mismatch: ``zip_with``
-    null-pads the shorter side, so a wrong ``in_dim`` would otherwise
-    yield all-NULL ``proj``/``norm_ratio_bp`` — an empty-looking
-    projection instead of an error (the failure mode the explicit
-    ``size() == in_dim`` gate turns into a loud one).
-
-    The quantized array is STAGED as its own projection column
-    (optimization r15): higher-order functions have no common-
-    subexpression elimination, so the inline form re-evaluated the
-    d-element quantization transform (and its null/width guard) inside
-    EVERY one of the ``out_dim`` fold expressions — plus once more in
-    the norm audit — ~17x the per-row quantization work at d'=16.
-    Referenced ``out_dim + 1`` times, the staged column survives
-    CollapseProject (SPARK-36718 keeps non-cheap producers with more
-    than one reference), so the transform runs once per row.
-
-    BATCH inputs with a known width route through the vectorized Arrow
-    kernel tier (:func:`_jl_kernel`): even staged, the ``out_dim`` fold
-    expressions are CodegenFallback and run interpreted per element —
-    the dominant CPU term of the full-width projection. STREAMING
-    inputs and unknown-width inputs keep the expression tiers below
-    (the kernel needs the driver-built sign matrix, i.e. ``in_dim``).
-    Both tiers are bit-identical (tests/test_round15_jl_kernel.py)."""
-    if in_dim is not None and not df.isStreaming:
-        return _jl_kernel(df, vec_col, out_dim, in_dim)
-    return _jl_expression(df, vec_col, out_dim, in_dim)
-
-
-def _jl_expression(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    out_dim: int = 16,
-    in_dim: int | None = None,
-) -> DataFrame:
-    """The pure-expression tier of :func:`jl_project` (see its
-    docstring for the staging/CollapseProject contract) — kept for
-    streaming inputs and unknown-width inputs, and as the parity
-    reference the kernel is pinned against."""
-    qa = quantized(F.col(vec_col))
-    if in_dim is not None:
-        # NULL vectors propagate as NULL proj (matching the in_dim=None
-        # branch) instead of falling into the raise: size(NULL) is -1
-        # (NULL under ANSI), so without the explicit isNull arm a single
-        # null embedding row would abort the query with a misleading
-        # "width -1 != in_dim" error.
-        qa = F.when(F.col(vec_col).isNull(), F.lit(None)).when(
-            F.size(F.col(vec_col)) == in_dim, qa
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        f"jl_project: {vec_col} width "
-                    ),
-                    F.size(F.col(vec_col)).cast("string"),
-                    F.lit(f" != in_dim {in_dim}"),
-                )
-            )
-        )
-        staged = df.withColumn("__jl_qa", qa)
-        qcol = F.col("__jl_qa")
-        proj = F.array(
-            *[
-                F.aggregate(
-                    F.zip_with(
-                        qcol,
-                        F.array(
-                            *[
-                                F.lit(_sign_py(i, k)).cast("bigint")
-                                for i in range(in_dim)
-                            ]
-                        ),
-                        lambda x, s: x * s,
-                    ),
-                    F.lit(0).cast("bigint"),
-                    lambda acc, x: acc + x,
-                )
-                for k in range(out_dim)
-            ]
-        )
-    else:
-        staged = df.withColumn("__jl_qa", qa)
-        qcol = F.col("__jl_qa")
-        proj = F.transform(
-            F.sequence(F.lit(0), F.lit(out_dim - 1)),
-            lambda k: F.aggregate(
-                F.zip_with(
-                    qcol,
-                    F.sequence(F.lit(0), F.size(qcol) - 1),
-                    lambda x, i: F.struct(x.alias("x"), i.alias("i")),
-                ),
-                F.lit(0).cast("bigint"),
-                lambda acc, e: acc + e["x"] * _sign(e["i"], k),
-            ),
-        )
-    # NULL input -> NULL proj in BOTH branches (without this the array
-    # constructors yield a [NULL, NULL, ...] shell instead of NULL).
-    # The norm audit reads the STAGED quantization (same values the
-    # projection consumed) instead of re-deriving it from the raw
-    # vector — a NULL vector yields NULL either way.
-    proj = F.when(F.col(vec_col).isNull(), F.lit(None)).otherwise(proj)
-    return (
-        staged.withColumn("proj", proj)
-        .withColumn(
-            "norm_ratio_bp",
-            F.expr(
-                f"CAST((10000 * aggregate(proj, CAST(0 AS BIGINT),"
-                f" (acc, x) -> acc + x * x))"
-                f" DIV ({out_dim} * aggregate(__jl_qa,"
-                f" CAST(0 AS BIGINT), (acc, x) -> acc + x * x)) AS BIGINT)"
-            ),
-        )
-        .drop("__jl_qa")
-    )
+    ``in_dim`` pins the vector width: any other width raises instead of
+    projecting. ``in_dim=None`` projects each row at its own width."""
+    return _jl_kernel(df, vec_col, out_dim, in_dim)

@@ -496,9 +496,7 @@ def _hyperplane_keys_kernel(
 
 # past this many planes the interpreted per-row fold chain dominates;
 # the Arrow matmul kernel takes over (both tiers bit-identical, so the
-# threshold is a pure cost knob; kmeans had the analogous
-# VECTORIZED_ASSIGN_MIN_K threshold until r15 made its kernel the
-# default for every batch fit)
+# threshold is a pure cost knob)
 KERNEL_MIN_PLANES = 48
 
 

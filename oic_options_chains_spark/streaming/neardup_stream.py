@@ -220,9 +220,9 @@ def streaming_image_near_dup(
 ) -> DataFrame:
     """Streaming PERCEPTUAL near-dup candidates: the aHash twin of
     :func:`streaming_near_dup`, reusing the same keyed-state bucket
-    ownership. The hash tier (operators/phash.ahash_band_table) is a
-    chain of stateless staged projections, so it composes with a
-    streaming source unchanged (no checkpoint barrier is needed here —
+    ownership. The hash tier (operators/phash.ahash_band_table) is one
+    stateless Arrow kernel, so it composes with a streaming source
+    unchanged (no checkpoint barrier is needed here —
     the barrier in the BATCH pair path exists to shield a self-join
     this operator doesn't have; ownership lives in keyed state
     instead). Cross-batch semantics match q_ahash_incremental's
@@ -240,14 +240,10 @@ def streaming_image_near_dup(
     from oic_options_chains_spark.operators.phash import ahash_band_table
 
     # posexplode_OUTER, not posexplode: a non-outer Generate lets the
-    # optimizer infer `size(__bands) > 0` and push it through every
-    # staged projection to the SCAN as one fused expression — the whole
-    # raster->sums->bands pipeline re-evaluated per row with the raster
-    # inlined into the block lambda (measured ~23 s/ROW interpreted;
-    # the batch tier dodges it with a localCheckpoint barrier, which a
-    # streaming plan cannot use). Outer generates imply no constraint;
-    # the null-guard below filters the GENERATED attribute, which can
-    # never push beneath the Generate.
+    # optimizer infer `size(__bands) > 0` and push it down toward the
+    # scan. Outer generates imply no constraint; the null-guard below
+    # filters the GENERATED attribute, which can never push beneath the
+    # Generate.
     hashed = ahash_band_table(docs, id_col=id_col, text_col=text_col)
     exploded = hashed.select(
         F.col("__id").cast("long").alias("doc_id"),

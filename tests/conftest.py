@@ -22,3 +22,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Say when the run is the reduced default profile: ``full``-marked
+    tests are deselected unless ``-m`` selects them."""
+    n_full = sum(
+        1
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("full") is not None
+    )
+    if n_full:
+        terminalreporter.write_line(
+            f"{n_full} full-profile tests deselected; "
+            "run tools/run_suite.py for the complete gate"
+        )

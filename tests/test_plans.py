@@ -469,34 +469,25 @@ def test_round8_joins_stay_equi_keyed(spark, sf_dir):
 
 
 def test_ahash_band_table_stays_staged(spark, sf_dir):
-    """The aHash raster/sums/bands staging must survive optimization:
-    if CollapseProject ever inlines the pixel array into the block-sum
-    lambda (or the checkpoint stops shielding the join from inferred
-    per-scan filters), the O(pixels) hash silently becomes O(pixels x
-    blocks x block_size) per row — a measured >10-minute stall at 1000
-    docs. Since optimization r15 the staged expression pipeline is the
-    STREAMING tier (batch routes through the vectorized Arrow kernel,
-    bit-identical, pinned by test_round15_ahash_kernel.py), so the
-    staging lock inspects it directly; batch plans are locked to the
-    kernel node instead. The pair plan must still scan a checkpointed
-    relation."""
-    from pyspark.sql import functions as F
-
-    from oic_options_chains_spark.operators.phash import (
-        _expression_band_table,
-        ahash_band_table,
-    )
+    """The aHash band table runs ONE hashing kernel on every input:
+    batch and streaming plans both carry the ``MapInPandas`` node, and
+    an under-split batch scan is repartitioned first for CPU-parallel
+    hashing (streaming takes its parallelism from the source). The pair
+    plan must still scan a checkpointed relation."""
+    from oic_options_chains_spark.operators.phash import ahash_band_table
     from oic_options_chains_spark.sources.registry import load_table
 
     d = load_table(spark, sf_dir, "documents")
-    opt = _optimized(_expression_band_table(d))
-    # raster / block-sums / total / bands stay separate stages
-    assert opt.count("Project [") >= 3, opt[:500]
-    # element_at must read the staged attribute, not an inlined raster
-    assert "element_at(__px#" in opt and "element_at(__bs#" in opt
     batch = _optimized(ahash_band_table(d))
-    assert "MapInPandas" in batch  # the r15 kernel tier
+    assert "MapInPandas" in batch
     assert "RepartitionByExpression" in batch  # CPU-parallel hashing
+    stream = spark.readStream.schema(d.schema).parquet(
+        f"{sf_dir}/documents.parquet"
+    )
+    # a streaming frame exposes only its analyzed plan before start()
+    streamed = ahash_band_table(stream)._jdf.queryExecution().analyzed().toString()
+    assert "MapInPandas" in streamed
+    assert "RepartitionByExpression" not in streamed
     pair_plan = _plan(QUERIES["q_ahash_dedup"](spark, sf_dir))
     assert "ExistingRDD" in pair_plan or "Scan ExistingRDD" in pair_plan
 

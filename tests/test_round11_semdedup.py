@@ -20,8 +20,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from oic_options_chains_spark.operators.kmeans import (
-    VECTORIZED_ASSIGN_MIN_K,
+    _assign_clusters_vectorized,
+    assign_clusters,
     kmeans_fit,
+    quantize,
     semantic_dedup,
     semantic_dedup_auto_eps,
 )
@@ -33,38 +35,47 @@ def emb(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings")
 
 
+def _kernel_and_fold(qv, cents, k):
+    kern = sorted(
+        (r.vec_id, r.cid)
+        for r in _assign_clusters_vectorized(qv, cents, k_bound=k).collect()
+    )
+    fold = sorted((r.vec_id, r.cid) for r in assign_clusters(qv, cents).collect())
+    return kern, fold
+
+
 class TestVectorizedAssignment:
     @pytest.mark.parametrize("k", [8, 40])
     def test_kernel_matches_fold_bit_for_bit(self, emb, k):
-        """Same corpus, same k, both assignment paths: identical
-        (vec_id, cid) for every row. The kernel is the default at ANY
-        k since r15, so parity is pinned at a small oracle-checked k
-        (8) as well as past the historical threshold (40) — ADVICE
-        r15."""
-        a_kernel, _ = kmeans_fit(emb, k=k, iters=2)
-        a_fold, _ = kmeans_fit(emb, k=k, iters=2, vectorized_assign=False)
-        kern = sorted((r.vec_id, r.cid) for r in a_kernel.collect())
-        fold = sorted((r.vec_id, r.cid) for r in a_fold.collect())
+        """Same corpus, same fitted centroids, both assignment paths:
+        identical (vec_id, cid) for every row, at a small oracle-checked
+        k (8) and a large one (40)."""
+        _, cents = kmeans_fit(emb, k=k, iters=2)
+        kern, fold = _kernel_and_fold(quantize(emb), cents, k)
         assert kern == fold
+        assert len(kern) > 0
+
+    def test_kernel_more_partitions_than_rows(self, emb):
+        """Empty partitions next to non-empty ones: the kernel emits
+        exactly the fold's rows, with the fold's schema."""
+        _, cents = kmeans_fit(emb, k=8, iters=1)
+        qv = quantize(emb).orderBy("vec_id").limit(3).repartition(8)
+        kern, fold = _kernel_and_fold(qv, cents, 8)
+        assert kern == fold
+        assert len(kern) == 3
+        assert (
+            _assign_clusters_vectorized(qv, cents, k_bound=8).schema
+            == assign_clusters(qv, cents).schema
+        )
 
     def test_default_threshold_routing(self, emb):
-        """Every batch fit defaults to the Arrow kernel at ANY k
-        (optimization r15: the kernel beat the interpreted fold at
-        small k too); ``vectorized_assign=False`` opts back into the
-        declarative fold (no Python in the plan). The returned
-        assignment is checkpoint-truncated (the final pass materializes
-        once), so the routing is read from the captured pre-checkpoint
-        lineage."""
+        """Every fit assigns through the Arrow kernel at any k. The
+        returned assignment is checkpoint-truncated (the final pass
+        materializes once), so the routing is read from the captured
+        pre-checkpoint lineage."""
         from oic_options_chains_spark.lineage import capture_checkpoints
 
-        with capture_checkpoints() as stages:
-            kmeans_fit(emb, k=8, iters=1, vectorized_assign=False)
-        fold_plans = "\n".join(
-            st.df._jdf.queryExecution().toString() for st in stages
-        )
-        assert "MapInPandas" not in fold_plans
-        assert "mapInPandas" not in fold_plans
-        for k in (8, VECTORIZED_ASSIGN_MIN_K):
+        for k in (8, 40):
             with capture_checkpoints() as stages:
                 kmeans_fit(emb, k=k, iters=1)
             default_plans = "\n".join(

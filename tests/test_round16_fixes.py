@@ -1,9 +1,9 @@
 """Round-16 optimization fixes (VERDICT r15 items 3 and 5, ADVICE r15).
 
 1. ``assign_cells`` — the public assignment-only wrapper q_drift_cells
-   now uses (fold-routed: no eager centroid-collect job on a direct
-   pass) — must agree bit-for-bit with the kernel path and keep Python
-   out of its default plan.
+   uses (the fold: no eager centroid-collect job on a direct pass) —
+   must agree bit-for-bit with the fit's kernel and keep Python out of
+   its plan.
 2. The bounded-collect guards are real raises (survive ``python -O``),
    and the driver-finish threshold is session-conf overridable
    (``spark.oic.localFinishMaxEdges``) so a real cluster can tune it —
@@ -44,7 +44,7 @@ class TestAssignCells:
         )
         kern = sorted(
             (r.vec_id, r.cid)
-            for r in assign_cells(qv, cents, k_bound=k).collect()
+            for r in _assign_clusters_vectorized(qv, cents, k_bound=k).collect()
         )
         assert fold == kern
 
@@ -54,11 +54,6 @@ class TestAssignCells:
         assert out.columns == ["vec_id", "cid"]
         plan = out._jdf.queryExecution().toString()
         assert "MapInPandas" not in plan and "mapInPandas" not in plan
-
-    def test_kernel_route_drops_qarr_from_output(self, emb):
-        _, cents = kmeans_fit(emb, k=8, iters=2)
-        out = assign_cells(quantize(emb), cents, k_bound=8)
-        assert out.columns == ["vec_id", "cid"]
 
     def test_kernel_k_bound_guard_raises(self, emb):
         """The bounded-collect guard is a raise, not an assert: an

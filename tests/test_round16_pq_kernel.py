@@ -1,7 +1,7 @@
-"""Optimization r16: the float64-screened exact PQ assignment kernel
-is bit-identical to the interpreted decimal argmin fold it replaces.
+"""The float64-screened exact PQ assignment kernel is bit-identical to
+the interpreted decimal argmin fold.
 
-``assign_codes`` routes fits through ``_assign_codes_vectorized`` —
+``assign_codes(k_bound=k_sub)`` runs ``_assign_codes_vectorized`` —
 per subspace one int64 Gram matmul plus a float64 screening score,
 with every screen-ambiguous cell re-compared EXACTLY in Python ints
 under the fold's strict-< / earlier-cid-wins rule. The fold remains
@@ -63,9 +63,7 @@ class TestAdversarialFixtures:
         kern = _codes(
             _assign_codes_vectorized(qv, books, n_sub=2, sub_dim=2, k_bound=4)
         )
-        fold = _codes(
-            assign_codes(qv, books, n_sub=2, sub_dim=2, vectorized=False)
-        )
+        fold = _codes(assign_codes(qv, books, n_sub=2, sub_dim=2))
         return kern, fold
 
     def test_exact_tie_keeps_lower_cid(self, spark):
@@ -157,7 +155,7 @@ class TestCorpusParity:
         qv = quantize(emb)
         _, books = _pq_fit_qv(qv, n_sub=8, k_sub=16, iters=1, sub_dim=8)
         kern = assign_codes(qv, books, n_sub=8, sub_dim=8, k_bound=16)
-        fold = assign_codes(qv, books, n_sub=8, sub_dim=8, vectorized=False)
+        fold = assign_codes(qv, books, n_sub=8, sub_dim=8, k_bound=None)
         assert [f.name for f in kern.schema.fields] == [
             f.name for f in fold.schema.fields
         ]
@@ -166,3 +164,15 @@ class TestCorpusParity:
             == fold.schema["codes"].dataType.simpleString()
             == "array<int>"
         )
+
+    def test_more_partitions_than_rows(self, spark, sf_dir):
+        """Empty partitions next to non-empty ones: the kernel emits
+        exactly the fold's rows."""
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        qv_all = quantize(emb)
+        _, books = _pq_fit_qv(qv_all, n_sub=8, k_sub=16, iters=1, sub_dim=8)
+        qv = qv_all.orderBy("vec_id").limit(3).repartition(8)
+        kern = _codes(assign_codes(qv, books, n_sub=8, sub_dim=8, k_bound=16))
+        fold = _codes(assign_codes(qv, books, n_sub=8, sub_dim=8))
+        assert kern == fold
+        assert len(kern) == 3

@@ -173,17 +173,9 @@ def test_stage_pk_string_over_cap_raises_early(spark, tmp_path):
 
 
 def test_jl_project_raises_on_in_dim_mismatch(spark):
-    """ADVICE r8 (projection.py): zip_with null-pads a wrong-width
-    vector — the literal-matrix branch must raise, not emit NULLs.
-    Since optimization r15 the batch path is the Arrow kernel (raises a
-    worker-side ValueError with the same message); the expression tier
-    keeps the raise_error contract — both pinned."""
-    from pyspark.errors import SparkRuntimeException
-
-    from oic_options_chains_spark.operators.projection import (
-        _jl_expression,
-        jl_project,
-    )
+    """ADVICE r8 (projection.py): a wrong-width vector must raise, not
+    emit NULLs (the kernel raises a worker-side ValueError)."""
+    from oic_options_chains_spark.operators.projection import jl_project
 
     ok = spark.createDataFrame(
         [(1, [0.1, 0.2, 0.3, 0.4])], ["vec_id", "embedding"]
@@ -196,5 +188,3 @@ def test_jl_project_raises_on_in_dim_mismatch(spark):
     )
     with pytest.raises(Exception, match="in_dim"):
         jl_project(bad, out_dim=2, in_dim=4).collect()
-    with pytest.raises(SparkRuntimeException, match="in_dim"):
-        _jl_expression(bad, out_dim=2, in_dim=4).collect()
