@@ -112,18 +112,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
 # regime in O(log n) rounds, so the bound replaces only the tail.
 LOCAL_FINISH_MAX_EDGES = 65536
 
-# session-conf override (optimization r16): a real cluster tunes the
-# driver-finish threshold to its driver memory budget (or disables it
-# with 0 to keep every round distributed — the sf0.5 A/B knob in
-# SCALING.md). Read per call so tests and benches can flip it without
-# re-importing.
-LOCAL_FINISH_CONF_KEY = "spark.oic.localFinishMaxEdges"
-
-
-def local_finish_max_edges(spark) -> int:
-    v = spark.conf.get(LOCAL_FINISH_CONF_KEY, None)
-    return int(v) if v is not None else LOCAL_FINISH_MAX_EDGES
-
 
 def connected_components(
     pairs: DataFrame,
@@ -267,10 +255,9 @@ def connected_components(
         ).first()
         return (r["n"], r["sh"])
 
-    local_bound = local_finish_max_edges(pairs.sparkSession)
     s_cur = _edge_stats(cur)
     for _ in range(max_rounds):
-        if s_cur[0] <= local_bound:
+        if s_cur[0] <= LOCAL_FINISH_MAX_EDGES:
             return _finish_local(cur, s_cur[0])
         # one alternating-star round per checkpoint barrier. (Batching
         # TWO rounds per barrier was tried in round 9 and REGRESSED ~60%

@@ -2,14 +2,14 @@
 AND progressive (T.81 Huffman + DCT over numpy), GIF (LZW), and WAV PCM
 (struct).
 
-These are the REAL kernels behind the ``fake=False`` seam in
-``operators/multimodal.py``. The container ships no Pillow/libvips/
-torchaudio, but a complete baseline PNG codec needs only ``zlib``
-(DEFLATE) plus the five scanline filters, a baseline-sequential JPEG
-codec needs only the public T.81 tables + an 8x8 DCT, GIF is LZW over a
-palette, and RIFF/WAVE PCM is plain struct parsing — so the decode path
-is honest working code, not a stub, for every image format a web-crawl
-media column actually carries, plus MJPEG AVI video (a RIFF demux over
+These are the kernels behind the media operators in
+``operators/multimodal.py``. No Pillow/libvips/torchaudio is needed: a
+complete baseline PNG codec needs only ``zlib`` (DEFLATE) plus the five
+scanline filters, a baseline-sequential JPEG codec needs only the
+public T.81 tables + an 8x8 DCT, GIF is LZW over a palette, and
+RIFF/WAVE PCM is plain struct parsing — so the decode path is honest
+working code, not a stub, for every image format a web-crawl media
+column actually carries, plus MJPEG AVI video (a RIFF demux over
 the JPEG decoder). Arithmetic-coded/hierarchical/12-bit JPEG and
 interframe video codecs (H.264/VP9/AV1 — an entropy+prediction stack,
 not a function) stay gated (ValueError) and are routed around via
@@ -219,8 +219,8 @@ def decode_image(blob: bytes) -> np.ndarray:
 
 
 def image_stats(blob: bytes, feature_dims: int) -> tuple[int, int, float, list[float]]:
-    """The real counterpart of multimodal._fake_image_stats: decode
-    (PNG or baseline JPEG), integer luma, and a ``feature_dims``-cell
+    """The ``multimodal.decode_media`` kernel: decode (PNG, JPEG or
+    GIF), integer luma, and a ``feature_dims``-cell
     mean-luma grid feature (the flattened luma split into contiguous
     cells — a deterministic fixed-width embedding stand-in)."""
     px = decode_image(blob)
@@ -274,9 +274,8 @@ def wav_stats(blob: bytes) -> tuple[int, int, int, int]:
 
 # ---------------------------------------------------------------------------
 # Baseline JPEG (ITU-T T.81): decoder for SOF0 sequential scans and a
-# 4:4:4 encoder, dependency-free (numpy only). Retires the last image
-# fake= seam: arithmetic coding, 12-bit, and interframe video stay
-# gated. The reference pipeline has no media tier at all — this is
+# 4:4:4 encoder, dependency-free (numpy only). Arithmetic coding,
+# 12-bit, and interframe video stay unsupported. The reference pipeline has no media tier at all — this is
 # part of the training-data extension surface (SURVEY.md section 6).
 # ---------------------------------------------------------------------------
 
@@ -2058,8 +2057,8 @@ def video_stats(
 ) -> tuple[int, int, int, list[tuple[int, float]]]:
     """(n_frames, width, height, [(frame_idx, mean_luma_0_1)]) for every
     ``every_n``-th frame of an MJPEG AVI or an ANIMATED GIF (composited
-    inter-frame, decode_gif_frames) — the real counterpart of the
-    byte-window fake in multimodal.sample_frames."""
+    inter-frame, decode_gif_frames) — the per-blob summary of the
+    frames multimodal.sample_frames emits."""
     if blob[:6] in (b"GIF87a", b"GIF89a"):
         gif = decode_gif_frames(blob)
         stats = [

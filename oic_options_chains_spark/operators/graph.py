@@ -473,9 +473,7 @@ def kcore_membership(
     the distributed peels shrink the graph into this regime first; the
     bound replaces only the tail rounds. Pinned against the
     distributed fixpoint by tests/test_round15_kcore_local.py."""
-    from oic_options_chains_spark.operators.clusters import (
-        local_finish_max_edges,
-    )
+    from oic_options_chains_spark.operators import clusters
 
     # materialize the (sparse, <= n*k) edge list once: the undirected
     # union references it twice, which would re-run the whole upstream
@@ -484,11 +482,10 @@ def kcore_membership(
     surv = fwd.union(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=True)
-    local_bound = local_finish_max_edges(surv.sparkSession)
     n_edges = surv.count()
     final_deg = None
     for i in range(rounds):
-        if n_edges <= local_bound:
+        if n_edges <= clusters.LOCAL_FINISH_MAX_EDGES:
             rows = surv.limit(n_edges + 1).collect()
             # a real raise, not assert: guards an unbounded driver
             # collect at scale and must survive python -O

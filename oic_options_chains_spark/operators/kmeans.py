@@ -569,10 +569,7 @@ def _pair_l2_kernel(pairs: DataFrame) -> DataFrame:
     def kernel(batches):
         for pdf in batches:
             if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {"cid": [], "vid_hi": [], "vid_lo": [], "d": []}
-                )
-                continue
+                continue  # an empty frame would carry no dtypes
             qh = np.array(pdf["q_hi"].tolist(), dtype=np.int64)
             ql = np.array(pdf["q_lo"].tolist(), dtype=np.int64)
             diff = qh - ql

@@ -3,29 +3,23 @@ metadata.
 
 A 100 TB training-data pipeline carries media as ``binary`` columns with
 a typed metadata struct alongside — never decoded in the plan until a
-kernel needs pixels. The Spark-side plumbing here (schemas, Arrow batch
-shapes, mapInPandas signatures, zero-shuffle placement) is real and
-tested, and so is the codec step for the formats a stdlib build can
-decode honestly (``operators/codecs.py``):
+kernel needs pixels. The kernels run the dependency-free codecs in
+``operators/codecs.py`` through the per-row adapter
+(``operators/kernel.py``):
 
-- ``decode_media(fake=False)`` / ``resize_images(fake=False)`` run
-  complete baseline PNG (zlib inflate, all five scanline filters, CRC
-  verification) and JPEG — baseline AND progressive SOF2 (T.81 Huffman
-  + DCT, 4:4:4/4:2:2/4:2:0, restart intervals, spectral selection +
-  successive approximation) — codecs; ``decode_audio`` parses RIFF/
-  WAVE PCM-16. Rows that fail to decode carry NULL stats (or drop,
-  for resize) — the quarantine-friendly shape.
-- ``sample_frames(fake=False)`` demuxes MJPEG AVI (RIFF walk + the
-  JPEG decoder per frame); interframe video codecs (H.264/VP9/AV1)
-  remain behind the seam awaiting a real library; ``sniff_format``
-  routes blobs before any kernel runs. JPEG
-  DIMENSIONS never need the codec: ``jpeg_dimensions`` walks the
-  marker segments to the SOFn frame header in pure JVM column
-  arithmetic — no decode, no Python.
-- ``fake=True`` (the default in schema tests) derives deterministic
-  "decoded" stats from the bytes themselves (md5-seeded), so the full
-  distributed path — batch iteration, struct results, frame explode — is
-  exercised end-to-end with stable assertions even without pixels.
+- ``decode_media`` / ``resize_images`` run complete baseline PNG (zlib
+  inflate, all five scanline filters, CRC verification) and JPEG —
+  baseline AND progressive SOF2 (T.81 Huffman + DCT, 4:4:4/4:2:2/4:2:0,
+  restart intervals, spectral selection + successive approximation) —
+  codecs; ``decode_audio`` parses RIFF/WAVE PCM-16. Rows that fail to
+  decode carry NULL stats (or drop, for resize) — the
+  quarantine-friendly shape.
+- ``sample_frames`` demuxes MJPEG AVI (RIFF walk + the JPEG decoder per
+  frame) and animated GIF; interframe video codecs (H.264/VP9/AV1)
+  have no decoder here, so their rows drop; ``sniff_format`` routes
+  blobs before any kernel runs. JPEG DIMENSIONS never need the codec:
+  ``jpeg_dimensions`` walks the marker segments to the SOFn frame
+  header in pure JVM column arithmetic — no decode, no Python.
 
 Scale notes: kernels run ``mapInPandas`` where the scan ran (no shuffle);
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds per-batch memory,
@@ -37,11 +31,12 @@ shuffles see small fixed-size features, never the raw bytes.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from oic_options_chains_spark.operators.kernel import row_kernel
 
 MEDIA_KINDS = ("image", "audio", "video")
 
@@ -126,69 +121,41 @@ def frame_manifest(
     )
 
 
-def _fake_image_stats(blob: bytes, dims: int) -> tuple[int, int, float, list[float]]:
-    """Deterministic stand-in for a real decoder: stats seeded from the
-    content digest. STUB — replace with Pillow at the marked seam."""
-    digest = hashlib.md5(blob).digest()
-    width = 16 + digest[0] % 64
-    height = 16 + digest[1] % 64
-    mean_luma = digest[2] / 255.0
-    feature = [b / 255.0 for b in digest[: dims]]
-    return width, height, mean_luma, feature
-
-
-def decode_media(df: DataFrame, fake: bool = True, feature_dims: int = 8) -> DataFrame:
+def decode_media(df: DataFrame, feature_dims: int = 8) -> DataFrame:
     """Decode + feature-extract images: ``MEDIA`` rows -> ``IMAGE_FEATURES``.
 
-    ``fake=False`` runs the REAL dependency-free codecs
-    (``operators/codecs.py``: PNG via stdlib zlib inflate + all five
-    scanline filters CRC-verified, baseline JPEG via T.81 Huffman +
-    DCT, baseline and progressive) — integer Rec.601 luma and a
-    mean-luma grid feature. Rows whose blob fails to decode (unknown
-    format, malformed chunk) keep their media_id with NULL stats — the
-    quarantine-friendly shape; route known-other formats to their own
-    kernels via ``sniff_format`` upstream. ``fake=True`` keeps the
-    md5-seeded deterministic stand-in for library-free schema tests.
+    Runs the dependency-free codecs (``operators/codecs.py``: PNG via
+    stdlib zlib inflate + all five scanline filters CRC-verified, JPEG
+    via T.81 Huffman + DCT, baseline and progressive) — integer Rec.601
+    luma and a mean-luma grid feature. Rows whose blob fails to decode
+    (unknown format, malformed chunk) keep their media_id with NULL
+    stats — the quarantine-friendly shape; route known-other formats to
+    their own kernels via ``sniff_format`` upstream.
     """
+    from oic_options_chains_spark.operators.codecs import image_stats
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def stats(mid, blob):
+        try:
+            w, h, luma, feat = image_stats(bytes(blob), feature_dims)
+        except ValueError:
+            w = h = luma = feat = None
+        yield (mid, w, h, luma, feat)
 
-        from oic_options_chains_spark.operators.codecs import image_stats
-
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                if fake:
-                    w, h, luma, feat = _fake_image_stats(bytes(blob), feature_dims)
-                else:
-                    try:
-                        w, h, luma, feat = image_stats(bytes(blob), feature_dims)
-                    except ValueError:
-                        w = h = luma = feat = None
-                out.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "mean_luma": luma,
-                        "feature": feat,
-                    }
-                )
-            yield pd.DataFrame(out, columns=IMAGE_FEATURES.fieldNames())
-
-    return df.select("media_id", "content").mapInPandas(run, IMAGE_FEATURES)
+    return row_kernel(df.select("media_id", "content"), stats, IMAGE_FEATURES)
 
 
-def resize_images(df: DataFrame, width: int, height: int, fake: bool = True) -> DataFrame:
-    """Resize kernel: same plumbing, new binary out. ``fake=False`` runs
-    the real codec path — PNG/baseline-JPEG decode, deterministic
-    nearest-neighbor resample, PNG re-encode (``operators/codecs.py``;
-    output is always PNG so resized bytes are deterministic — JPEG
-    re-encode would be lossy twice); rows that fail to decode are
-    DROPPED (quarantine upstream via ``sniff_format``). The fake keeps
-    the bytes opaque (digest-stamped) but the schema/flow is the real
-    one."""
+def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
+    """Resize kernel: PNG/JPEG decode, deterministic nearest-neighbor
+    resample, PNG re-encode (``operators/codecs.py``; output is always
+    PNG so resized bytes are deterministic — JPEG re-encode would be
+    lossy twice). Rows that fail to decode are DROPPED (quarantine
+    upstream via ``sniff_format``)."""
+    from oic_options_chains_spark.operators.codecs import (
+        decode_image,
+        encode_png,
+        resize_nearest,
+    )
+
     out_schema = T.StructType(
         [
             T.StructField("media_id", T.LongType(), False),
@@ -196,32 +163,14 @@ def resize_images(df: DataFrame, width: int, height: int, fake: bool = True) -> 
         ]
     )
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def resized(mid, blob):
+        try:
+            px = decode_image(bytes(blob))
+        except ValueError:
+            return
+        yield (mid, encode_png(resize_nearest(px, width, height)))
 
-        from oic_options_chains_spark.operators.codecs import (
-            decode_image,
-            encode_png,
-            resize_nearest,
-        )
-
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                if fake:
-                    content = hashlib.md5(
-                        bytes(blob) + f":{width}x{height}".encode()
-                    ).digest()
-                else:
-                    try:
-                        px = decode_image(bytes(blob))
-                    except ValueError:
-                        continue
-                    content = encode_png(resize_nearest(px, width, height))
-                rows.append({"media_id": mid, "content": content})
-            yield pd.DataFrame(rows, columns=out_schema.fieldNames())
-
-    return df.select("media_id", "content").mapInPandas(run, out_schema)
+    return row_kernel(df.select("media_id", "content"), resized, out_schema)
 
 
 AUDIO_FEATURES = T.StructType(
@@ -241,102 +190,50 @@ def decode_audio(df: DataFrame) -> DataFrame:
     count, and integer loudness stats (peak and 1000x-scaled mean
     absolute amplitude — exact, no float) for ASR-prep quality gates.
     Non-WAV / malformed rows keep their id with NULL stats. Same
-    zero-shuffle mapInPandas placement as ``decode_media``."""
+    zero-shuffle placement as ``decode_media``."""
+    from oic_options_chains_spark.operators.codecs import wav_stats
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def stats(mid, blob):
+        try:
+            rate, n, peak, mean_e3 = wav_stats(bytes(blob))
+        except ValueError:
+            rate = n = peak = mean_e3 = None
+        yield (mid, rate, n, peak, mean_e3)
 
-        from oic_options_chains_spark.operators.codecs import wav_stats
-
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    rate, n, peak, mean_e3 = wav_stats(bytes(blob))
-                except ValueError:
-                    rate = n = peak = mean_e3 = None
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "sample_rate": rate,
-                        "n_samples": n,
-                        "peak_abs": peak,
-                        "mean_abs_e3": mean_e3,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=AUDIO_FEATURES.fieldNames())
-
-    return df.select("media_id", "content").mapInPandas(run, AUDIO_FEATURES)
+    return row_kernel(df.select("media_id", "content"), stats, AUDIO_FEATURES)
 
 
-def sample_frames(
-    df: DataFrame, frame_bytes: int = 256, every_n: int = 2, fake: bool = True
-) -> DataFrame:
-    """Frame-sample videos: one output row per sampled frame (a flatMap in
-    mapInPandas — output length independent of input length).
+def sample_frames(df: DataFrame, every_n: int = 2) -> DataFrame:
+    """Frame-sample videos: one output row per sampled frame (a flatMap —
+    output length independent of input length).
 
-    ``fake=False`` runs the REAL demuxers: MJPEG AVI blobs
-    (``codecs.mjpeg_frames`` + the JPEG decoder) and ANIMATED GIFs
-    (``codecs.decode_gif_frames`` — true inter-frame compositing of
-    sub-rect deltas, transparency, disposal methods): frame_idx is
-    the actual stream index and frame_digest the md5 of the DECODED
-    pixel bytes, so two byte-different encodes of the same frames
-    dedup. Blobs that fail to demux/decode (interframe codecs, non-AVI,
-    corruption) are DROPPED — quarantine upstream via ``sniff_format``.
-    The fake treats fixed-size byte windows as frames so the flatMap
-    plumbing tests without media."""
+    Demuxes MJPEG AVI blobs (``codecs.mjpeg_frames`` + the JPEG decoder)
+    and ANIMATED GIFs (``codecs.decode_gif_frames`` — true inter-frame
+    compositing of sub-rect deltas, transparency, disposal methods):
+    frame_idx is the actual stream index and frame_digest the md5 of
+    the DECODED pixel bytes, so two byte-different encodes of the same
+    frames dedup. Blobs that fail to demux/decode (interframe codecs,
+    non-AVI, corruption) are DROPPED — quarantine upstream via
+    ``sniff_format``."""
+    from oic_options_chains_spark.operators.codecs import (
+        decode_gif_frames,
+        decode_jpeg,
+        mjpeg_frames,
+    )
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def frames(mid, blob):
+        raw = bytes(blob)
+        try:
+            if raw[:6] in (b"GIF87a", b"GIF89a"):
+                picked = decode_gif_frames(raw)[::every_n]
+            else:
+                picked = [decode_jpeg(j) for j in mjpeg_frames(raw)[::every_n]]
+        except ValueError:
+            return
+        for n, px in enumerate(picked):
+            yield (mid, n * every_n, hashlib.md5(px.tobytes()).hexdigest())
 
-        from oic_options_chains_spark.operators.codecs import (
-            decode_gif_frames,
-            decode_jpeg,
-            mjpeg_frames,
-        )
-
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                raw = bytes(blob)
-                if fake:
-                    n_frames = max(len(raw) // frame_bytes, 1)
-                    for idx in range(0, n_frames, every_n):
-                        window = raw[idx * frame_bytes : (idx + 1) * frame_bytes]
-                        rows.append(
-                            {
-                                "media_id": mid,
-                                "frame_idx": idx,
-                                "frame_digest": hashlib.md5(window).hexdigest(),
-                            }
-                        )
-                    continue
-                try:
-                    if raw[:6] in (b"GIF87a", b"GIF89a"):
-                        pixel_frames = decode_gif_frames(raw)
-                        picks = [
-                            (i, pixel_frames[i])
-                            for i in range(0, len(pixel_frames), every_n)
-                        ]
-                    else:
-                        jpegs = mjpeg_frames(raw)
-                        picks = [
-                            (i, decode_jpeg(jpegs[i]))
-                            for i in range(0, len(jpegs), every_n)
-                        ]
-                    for idx, px in picks:
-                        rows.append(
-                            {
-                                "media_id": mid,
-                                "frame_idx": idx,
-                                "frame_digest": hashlib.md5(px.tobytes()).hexdigest(),
-                            }
-                        )
-                except ValueError:
-                    continue
-            yield pd.DataFrame(rows, columns=FRAME_SAMPLES.fieldNames())
-
-    return df.select("media_id", "content").mapInPandas(run, FRAME_SAMPLES)
+    return row_kernel(df.select("media_id", "content"), frames, FRAME_SAMPLES)
 
 
 # magic-byte prefixes (hex, uppercase) -> canonical format label
@@ -680,7 +577,7 @@ def decompress_text(df: DataFrame, max_bytes: int = 16 << 20) -> DataFrame:
       payloads all surface as NULL text with the row's id preserved,
       never as a task failure.
 
-    Same zero-shuffle mapInPandas placement as the codec kernels."""
+    Same zero-shuffle placement as the codec kernels."""
 
     def _inflate(raw: bytes) -> str | None:
         import zlib
@@ -714,23 +611,11 @@ def decompress_text(df: DataFrame, max_bytes: int = 16 << 20) -> DataFrame:
         except (zlib.error, UnicodeDecodeError):
             return None
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def inflated(mid, blob):
+        # NULL content (a failed fetch) quarantines like any other
+        # undecodable row — never a task failure
+        raw = bytes(blob) if blob is not None else None
+        text = _inflate(raw)
+        yield (mid, text, len(raw) if text is not None else None)
 
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                # NULL content (a failed fetch) quarantines like any
-                # other undecodable row — never a task failure
-                raw = bytes(blob) if blob is not None else None
-                text = _inflate(raw)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "text": text,
-                        "n_raw_bytes": len(raw) if text is not None else None,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=TEXT_PAYLOADS.fieldNames())
-
-    return df.select("media_id", "content").mapInPandas(run, TEXT_PAYLOADS)
+    return row_kernel(df.select("media_id", "content"), inflated, TEXT_PAYLOADS)

@@ -35,6 +35,9 @@ from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from oic_options_chains_spark.operators.kernel import row_kernel
 
 SIDE = 32  # raster is SIDE x SIDE pixels
 GRID = 8  # GRID x GRID blocks, each (SIDE/GRID)^2 pixels
@@ -710,37 +713,28 @@ def image_ahash_kernel(
     ok, err). Undecodable blobs quarantine as ok=0 rows with the error
     class, the same contract as the codec queries — one bad blob never
     kills a 100 TB pass."""
-    import pandas as pd
-
     from oic_options_chains_spark.operators.codecs import decode_png
 
-    schema = (
-        f"{id_col} bigint, band_idx int, band_val bigint, ok int, err string"
+    schema = T.StructType(
+        [
+            T.StructField(id_col, T.LongType()),
+            T.StructField("band_idx", T.IntegerType()),
+            T.StructField("band_val", T.LongType()),
+            T.StructField("ok", T.IntegerType()),
+            T.StructField("err", T.StringType()),
+        ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                id_col: [], "band_idx": [], "band_val": [], "ok": [], "err": []
-            }
-            for rid, blob in zip(pdf[id_col], pdf[blob_col]):
-                try:
-                    bands = bands_of(ahash64(decode_png(bytes(blob))))
-                    for t, v in enumerate(bands):
-                        out[id_col].append(rid)
-                        out["band_idx"].append(t)
-                        out["band_val"].append(v)
-                        out["ok"].append(1)
-                        out["err"].append(None)
-                except Exception as e:  # noqa: BLE001 — quarantine, never kill
-                    out[id_col].append(rid)
-                    out["band_idx"].append(-1)
-                    out["band_val"].append(-1)
-                    out["ok"].append(0)
-                    out["err"].append(type(e).__name__)
-            yield pd.DataFrame(out)
+    def bands(rid, blob):
+        try:
+            hashed = bands_of(ahash64(decode_png(bytes(blob))))
+        except Exception as e:  # noqa: BLE001 — quarantine, never kill
+            yield (rid, -1, -1, 0, type(e).__name__)
+        else:
+            for t, v in enumerate(hashed):
+                yield (rid, t, v, 1, None)
 
-    return df.select(id_col, blob_col).mapInPandas(run, schema)
+    return row_kernel(df.select(id_col, blob_col), bands, schema)
 
 
 def _tiled_codepoints(text: str):
@@ -790,36 +784,32 @@ def media_corpus_bands(
     KBs/image-corpus, not the corpus itself. At 100 TB this is the
     whole design: decode locality in the kernel tier, JVM equi-joins on
     the index."""
-    import pandas as pd
+    import numpy as np
 
     from oic_options_chains_spark.operators.codecs import decode_png, encode_png
 
-    schema = "__id bigint, __bands array<bigint>, err string"
+    schema = T.StructType(
+        [
+            T.StructField("__id", T.LongType()),
+            T.StructField("__bands", T.ArrayType(T.LongType())),
+            T.StructField("err", T.StringType()),
+        ]
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids: list[int] = []
-            bands: list[list[int] | None] = []
-            errs: list[str | None] = []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                cp = _tiled_codepoints(text if text is not None else "")
-                base = (30 + cp % 180).astype(np.uint8).reshape(SIDE, SIDE)
-                for feed in (0, 1):
-                    img_id = int(rid) * 2 + feed
-                    raster = base + np.uint8(MEDIA_SHIFT * feed)
-                    blob = encode_png(raster)
-                    if img_id % MEDIA_CORRUPT_EVERY == 0:
-                        blob = blob[:8]
-                    ids.append(img_id)
-                    try:
-                        bands.append(bands_of(ahash64(decode_png(blob))))
-                        errs.append(None)
-                    except Exception as e:  # noqa: BLE001 — quarantine
-                        bands.append(None)
-                        errs.append(type(e).__name__)
-            yield pd.DataFrame({"__id": ids, "__bands": bands, "err": errs})
+    def bands(rid, text):
+        cp = _tiled_codepoints(text if text is not None else "")
+        base = (30 + cp % 180).astype(np.uint8).reshape(SIDE, SIDE)
+        for feed in (0, 1):
+            img_id = int(rid) * 2 + feed
+            blob = encode_png(base + np.uint8(MEDIA_SHIFT * feed))
+            if img_id % MEDIA_CORRUPT_EVERY == 0:
+                blob = blob[:8]
+            try:
+                hashed = bands_of(ahash64(decode_png(blob)))
+            except Exception as e:  # noqa: BLE001 — quarantine
+                yield (img_id, None, type(e).__name__)
+            else:
+                yield (img_id, hashed, None)
 
     # decode+hash is CPU-dense per row: take parallelism from an explicit
     # exchange when the scan is under-split (same adaptive rule as
@@ -831,7 +821,7 @@ def media_corpus_bands(
         want = _probe_partitions(docs)
         if docs.rdd.getNumPartitions() < want:
             src = docs.repartition(want, F.col(id_col))
-    return src.select(id_col, text_col).mapInPandas(run, schema)
+    return row_kernel(src.select(id_col, text_col), bands, schema)
 
 
 def media_near_dup(

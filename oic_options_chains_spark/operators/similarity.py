@@ -476,12 +476,9 @@ def _hyperplane_keys_kernel(
     )
 
     def kernel(batches):
-        import pandas as pd
-
         for pdf in batches:
             if len(pdf) == 0:
-                yield pdf.assign(__keys=pd.Series([], dtype=object))
-                continue
+                continue  # an empty frame would carry no dtypes
             q = np.floor(
                 np.array(pdf[vec_col].tolist(), dtype=np.float64) * 4096
             ).astype(np.int64)

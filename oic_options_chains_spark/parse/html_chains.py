@@ -19,13 +19,12 @@ The mark price also comes from the page in these eras (X2: ``(table 5)
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from oic_options_chains_spark.functions.cleaning import occ_symbol_parse
+from oic_options_chains_spark.operators.kernel import row_kernel
 from oic_options_chains_spark.parse.eras import Era
 from oic_options_chains_spark.parse.html_tree import nested_tables, parse_tables
 
@@ -97,28 +96,20 @@ def parse_chain_rows(html: str, era: Era) -> list[dict]:
 def extract_chain_rows(pages: DataFrame, era: Era) -> DataFrame:
     """``(act_symbol, content)`` pages -> raw chain cells + error channel."""
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def chain_rows(sym, content):
+        try:
+            recs = parse_chain_rows(content, era)
+        except Exception as exc:  # quarantine, never fail the job
+            err = f"{type(exc).__name__}: {exc}"
+            yield (sym, None, None, *(None,) * len(_VALUE_FIELDS), err)
+        else:
+            for rec in recs:
+                values = (rec[f] for f in _VALUE_FIELDS)
+                yield (sym, rec["occ"], rec["mark_price"], *values, None)
 
-        for pdf in batches:
-            rows = []
-            for sym, content in zip(pdf["act_symbol"], pdf["content"]):
-                try:
-                    for rec in parse_chain_rows(content, era):
-                        rows.append(
-                            {"act_symbol": sym, "parse_error": None, **rec}
-                        )
-                except Exception as exc:  # quarantine, never fail the job
-                    rows.append(
-                        {
-                            "act_symbol": sym,
-                            "parse_error": f"{type(exc).__name__}: {exc}",
-                            **dict.fromkeys(("occ", "mark_price", *_VALUE_FIELDS)),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=CHAIN_CELLS_SCHEMA.fieldNames())
-
-    return pages.mapInPandas(run, CHAIN_CELLS_SCHEMA)
+    return row_kernel(
+        pages.select("act_symbol", "content"), chain_rows, CHAIN_CELLS_SCHEMA
+    )
 
 
 def chain_long_from_cells(cells: DataFrame) -> DataFrame:

@@ -4,19 +4,19 @@ non-relational parse surface.
 The reference sxpath-walks a cleaned page to ten positional table cells
 (transform-load.2025-08-19.rkt:242-260; legacy transform-load.rkt:144-162).
 Here the same walk is a tiny pure-Python kernel (stdlib ``html.parser``)
-run under ``mapInPandas``: it emits the ten RAW cell strings per page and
-nothing else. Every downstream transformation — percent decode, sentinel
--> NULL, trunc(x/100, 4), ``" - "`` pair split, prior-year date inference
-— is expressed relationally on the result (SURVEY.md F3/F6/F18/F22/F24),
-so Catalyst optimizes it and only the unavoidable HTML walk pays the
-Python tax.
+run under the per-row adapter (``operators/kernel.py``): it emits the
+ten RAW cell strings per page and nothing else. Every downstream
+transformation — percent decode, sentinel -> NULL, trunc(x/100, 4),
+``" - "`` pair split, prior-year date inference — is expressed
+relationally on the result (SURVEY.md F3/F6/F18/F22/F24), so Catalyst
+optimizes it and only the unavoidable HTML walk pays the Python tax.
 
 Failure isolation (T5): a page whose structure does not match yields a
 row with ``parse_error`` set and NULL cells — the reference's
 per-file rollback-and-count channel (transform-load.2025-08-19.rkt:
 295-301) becomes a quarantine filter instead of an exception.
 
-Scale: pages are independent rows; ``mapInPandas`` batches stream
+Scale: pages are independent rows; the adapter's batches stream
 Arrow-encoded with ``spark.sql.execution.arrow.maxRecordsPerBatch``
 bounding memory. No shuffle is introduced — parsing runs where the file
 scan ran.
@@ -25,7 +25,6 @@ scan ran.
 from __future__ import annotations
 
 import datetime as dt
-from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -34,6 +33,7 @@ from pyspark.sql import types as T
 from oic_options_chains_spark.functions.cleaning import sentinel_to_null
 from oic_options_chains_spark.functions.dates import prior_year_date
 from oic_options_chains_spark.functions.decimal_ops import trunc_n
+from oic_options_chains_spark.operators.kernel import row_kernel
 from oic_options_chains_spark.parse.eras import (
     BAD_PAGE_MARKERS,
     REQUIRED_MARKER,
@@ -126,22 +126,16 @@ CELLS_SCHEMA = T.StructType(
 def extract_history_cells(pages: DataFrame, era: Era) -> DataFrame:
     """``(act_symbol, content)`` pages -> raw cells + error channel."""
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def cells(sym, content):
+        try:
+            rec = parse_history_cells(content, era)
+        except Exception as exc:  # quarantine, never fail the job
+            err = f"{type(exc).__name__}: {exc}"
+            yield (sym, *(None,) * len(CELL_FIELDS), err)
+        else:
+            yield (sym, *(rec[f] for f in CELL_FIELDS), None)
 
-        for pdf in batches:
-            rows = []
-            for sym, content in zip(pdf["act_symbol"], pdf["content"]):
-                rec: dict = {"act_symbol": sym, "parse_error": None}
-                try:
-                    rec.update(parse_history_cells(content, era))
-                except Exception as exc:  # quarantine, never fail the job
-                    rec.update(dict.fromkeys(CELL_FIELDS))
-                    rec["parse_error"] = f"{type(exc).__name__}: {exc}"
-                rows.append(rec)
-            yield pd.DataFrame(rows, columns=CELLS_SCHEMA.fieldNames())
-
-    return pages.mapInPandas(run, CELLS_SCHEMA)
+    return row_kernel(pages.select("act_symbol", "content"), cells, CELLS_SCHEMA)
 
 
 def is_bad_page(content: Column, era: Era) -> Column:

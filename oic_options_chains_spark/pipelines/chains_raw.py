@@ -230,15 +230,13 @@ def chain_day_html(
         extract_chain_rows,
         page_marks,
     )
-    from oic_options_chains_spark.parse.html_vol import is_bad_page
-    from oic_options_chains_spark.pipelines.volatility import read_history_pages
+    from oic_options_chains_spark.pipelines.volatility import read_good_pages
 
     era = era or era_for_date(ingest_date)
     assert era.chain_format == "html", (
         f"era {era.name} downloads JSON chains; use chain_day"
     )
-    pages = read_history_pages(spark, base_dir, ingest_date)
-    good = pages.filter(~is_bad_page(F.col("content"), era))
+    good = read_good_pages(spark, base_dir, ingest_date, era)
     cells = extract_chain_rows(good, era)
     long_df = chain_long_from_cells(cells)
     if all_options:

@@ -43,6 +43,22 @@ def read_history_pages(
     )
 
 
+def read_good_pages(
+    spark: SparkSession, base_dir: str, ingest_date: dt.date, era: Era
+) -> DataFrame:
+    """The day's pages minus the reference's bad-page skip (P9)."""
+    pages = read_history_pages(spark, base_dir, ingest_date)
+    return pages.filter(~is_bad_page(F.col("content"), era))
+
+
+def _history_cells(
+    spark: SparkSession, base_dir: str, ingest_date: dt.date, era: Era
+) -> DataFrame:
+    """The X1 kernel's raw cells + error channel over the good pages."""
+    good = read_good_pages(spark, base_dir, ingest_date, era)
+    return extract_history_cells(good, era)
+
+
 def vol_history(
     spark: SparkSession,
     base_dir: str,
@@ -51,9 +67,7 @@ def vol_history(
 ) -> DataFrame:
     """The day's parsed ``volatility_history`` DataFrame."""
     era = era or era_for_date(ingest_date)
-    pages = read_history_pages(spark, base_dir, ingest_date)
-    good = pages.filter(~is_bad_page(F.col("content"), era))
-    cells = extract_history_cells(good, era)
+    cells = _history_cells(spark, base_dir, ingest_date, era)
     return normalize_history(cells, ingest_date, era)
 
 
@@ -65,9 +79,7 @@ def vol_history_quarantine(
 ) -> DataFrame:
     """The failure channel (T5): pages that parsed badly, with the error."""
     era = era or era_for_date(ingest_date)
-    pages = read_history_pages(spark, base_dir, ingest_date)
-    good = pages.filter(~is_bad_page(F.col("content"), era))
-    cells = extract_history_cells(good, era)
+    cells = _history_cells(spark, base_dir, ingest_date, era)
     return cells.filter(F.col("parse_error").isNotNull()).select(
         "act_symbol", "parse_error"
     )

@@ -124,6 +124,17 @@ def _write_manifest(snap_dir: str, entries: list[dict]) -> None:
         raise
 
 
+def _stage(df: DataFrame, snap_dir: str, prefix: str) -> tuple[str, int]:
+    """Write ``df`` once into a fresh, unique data dir under ``snap_dir``
+    and count the written parquet; returns (dir basename, rows). The
+    underscore prefix keeps the dir invisible to any parquet discovery
+    over snap_dir itself."""
+    data_dir = tempfile.mkdtemp(dir=snap_dir, prefix=prefix)
+    df.write.mode("overwrite").parquet(data_dir)
+    n = df.sparkSession.read.parquet(data_dir).count()
+    return os.path.basename(data_dir), n
+
+
 def commit_snapshot(
     df: DataFrame,
     snap_dir: str,
@@ -148,18 +159,12 @@ def commit_snapshot(
     the reference's commit message carried only the date; the count is
     the recon anchor a restore can verify against)."""
     os.makedirs(snap_dir, exist_ok=True)
-    # unique immutable data dir; underscore prefix keeps it invisible
-    # to any parquet discovery over snap_dir itself
-    data_dir = tempfile.mkdtemp(dir=snap_dir, prefix="_v-")
-    # checkpoint first in case df reads a previous version of this path
-    staged = df.localCheckpoint(eager=True)
-    n = staged.count()
-    staged.write.mode("overwrite").parquet(data_dir)
+    data_dir, n = _stage(df, snap_dir, "_v-")
     entry = {
         "snapshot_id": snapshot_id,
         "message": message,
         "rows": n,
-        "data_dir": os.path.basename(data_dir),
+        "data_dir": data_dir,
         "committed_at": committed_at
         or dt.datetime.now(dt.timezone.utc).isoformat(timespec="seconds"),
     }
@@ -268,11 +273,8 @@ def commit_tables(
     os.makedirs(snap_dir, exist_ok=True)
     tables: dict[str, dict] = {}
     for name in sorted(dfs):
-        staged = dfs[name].localCheckpoint(eager=True)
-        n = staged.count()
-        data_dir = tempfile.mkdtemp(dir=snap_dir, prefix=f"_v-{name}-")
-        staged.write.mode("overwrite").parquet(data_dir)
-        tables[name] = {"data_dir": os.path.basename(data_dir), "rows": n}
+        data_dir, n = _stage(dfs[name], snap_dir, f"_v-{name}-")
+        tables[name] = {"data_dir": data_dir, "rows": n}
     entry = {
         "snapshot_id": snapshot_id,
         "message": message,

@@ -1,5 +1,5 @@
 """Real PNG/WAV codecs: roundtrips, all five PNG filters, corruption
-detection, and the fake=False Spark kernels end-to-end."""
+detection, and the Spark media kernels end-to-end."""
 
 import struct
 import zlib
@@ -172,7 +172,7 @@ def test_decode_media_real_kernel(spark):
     df = spark.createDataFrame(
         rows, "media_id long, kind string, content binary, meta string"
     )
-    got = {r.media_id: r for r in decode_media(df, fake=False).collect()}
+    got = {r.media_id: r for r in decode_media(df).collect()}
     assert (got[1].width, got[1].height) == (20, 12)
     expected_luma = float(luma(img).mean()) / 255.0
     assert got[1].mean_luma == pytest.approx(expected_luma)
@@ -188,7 +188,7 @@ def test_resize_images_real_kernel(spark):
         [(7, bytearray(encode_png(img))), (8, bytearray(b"garbage"))],
         "media_id long, content binary",
     )
-    out = resize_images(df, 4, 6, fake=False).collect()
+    out = resize_images(df, 4, 6).collect()
     assert [r.media_id for r in out] == [7]  # garbage row dropped
     resized = decode_png(bytes(out[0].content))
     assert resized.shape == (6, 4, 4)
@@ -587,7 +587,7 @@ def test_jpeg_dims_router_agrees_with_real_decode(spark):
 
 
 def test_decode_media_real_kernel_handles_jpeg(spark):
-    """fake=False decode_media over a mixed PNG/JPEG/garbage column:
+    """decode_media over a mixed PNG/JPEG/garbage column:
     real stats for both codecs, NULL quarantine for the rest."""
     from oic_options_chains_spark.operators.multimodal import decode_media
 
@@ -601,7 +601,7 @@ def test_decode_media_real_kernel_handles_jpeg(spark):
     df = spark.createDataFrame(
         rows, "media_id long, kind string, content binary, meta string"
     )
-    got = {r.media_id: r for r in decode_media(df, fake=False).collect()}
+    got = {r.media_id: r for r in decode_media(df).collect()}
     assert (got[1].width, got[1].height) == (18, 12)
     assert (got[2].width, got[2].height) == (14, 10)
     # flat 200-gray: mean luma ~200/255
@@ -735,7 +735,7 @@ def test_decode_media_real_kernel_handles_gif(spark):
         [(1, "image", bytearray(encode_gif(img)), None)],
         "media_id long, kind string, content binary, meta string",
     )
-    row = decode_media(df, fake=False).collect()[0]
+    row = decode_media(df).collect()[0]
     assert (row.width, row.height) == (12, 10)
 
 
@@ -804,7 +804,7 @@ def test_sample_frames_real_kernel(spark):
         (2, bytearray(b"not a video")),
     ]
     df = spark.createDataFrame(rows, "media_id long, content binary")
-    got = sample_frames(df, every_n=2, fake=False).collect()
+    got = sample_frames(df, every_n=2).collect()
     assert sorted((r.media_id, r.frame_idx) for r in got) == [(1, 0), (1, 2), (1, 4)]
     # digests are of DECODED pixels: re-encoding the same frames at the
     # same quality yields identical digests

@@ -109,7 +109,7 @@ def test_video_stats_and_spark_kernel_handle_gif(spark):
         [(1, bytearray(blob)), (2, bytearray(b"not a video"))],
         "media_id long, content binary",
     )
-    rows = sample_frames(df, every_n=2, fake=False).collect()
+    rows = sample_frames(df, every_n=2).collect()
     assert [r.frame_idx for r in rows] == [0, 2, 4]
     import hashlib
 

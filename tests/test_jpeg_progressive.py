@@ -100,7 +100,7 @@ def test_progressive_quarantine_under_corruption():
 
 
 def test_progressive_through_the_spark_kernel(spark):
-    """decode_media(fake=False) now accepts progressive blobs end-to-end."""
+    """decode_media accepts progressive blobs end-to-end."""
     from oic_options_chains_spark.operators.codecs import luma
     from oic_options_chains_spark.operators.multimodal import decode_media
 
@@ -112,7 +112,7 @@ def test_progressive_through_the_spark_kernel(spark):
     df = spark.createDataFrame(
         rows, "media_id long, kind string, content binary, meta string"
     )
-    got = {r.media_id: r for r in decode_media(df, fake=False).collect()}
+    got = {r.media_id: r for r in decode_media(df).collect()}
     assert (got[1].width, got[1].height) == (20, 12)
     want = decode_jpeg(encode_jpeg(img, quality=95))
     assert got[1].mean_luma == pytest.approx(float(luma(want).mean()) / 255.0)

@@ -1,14 +1,22 @@
-"""Multimodal plumbing tests: the decode seam is stubbed (no codec in
-this container) but the distributed path — schemas, Arrow batches,
-flatMap frame explode, determinism — is real."""
+"""Multimodal kernel tests over real blobs built with the in-tree codecs
+(``operators/codecs.py``): schemas, Arrow batches, flatMap frame
+explode, determinism and the quarantine shape of undecodable rows."""
 
 from __future__ import annotations
 
 import hashlib
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from oic_options_chains_spark.operators.codecs import (
+    decode_jpeg,
+    decode_png,
+    encode_avi_mjpeg,
+    encode_jpeg,
+    encode_png,
+)
 from oic_options_chains_spark.operators.multimodal import (
     FRAME_SAMPLES,
     IMAGE_FEATURES,
@@ -19,8 +27,21 @@ from oic_options_chains_spark.operators.multimodal import (
 )
 
 
+def _image(i: int) -> np.ndarray:
+    """A seeded (h, w) gray raster; sizes vary with ``i``."""
+    rng = np.random.RandomState(i)
+    return rng.randint(0, 256, size=(8 + i, 16 + i)).astype(np.uint8)
+
+
+def _frames(i: int) -> list[np.ndarray]:
+    """``i`` seeded 16x16 RGB frames."""
+    rng = np.random.RandomState(100 + i)
+    return [rng.randint(0, 256, size=(16, 16, 3)).astype(np.uint8) for _ in range(i)]
+
+
 @pytest.fixture(scope="module")
 def media(spark):
+    """Opaque blobs that no codec accepts."""
     rows = [
         (i, "image" if i % 3 else "video", bytes([i % 251]) * (300 + i), ("raw", 64, 64, None, None))
         for i in range(1, 21)
@@ -28,46 +49,69 @@ def media(spark):
     return spark.createDataFrame(rows, MEDIA).repartition(4).cache()
 
 
-def test_decode_media_schema_and_determinism(media):
-    feats = decode_media(media, feature_dims=8)
+@pytest.fixture(scope="module")
+def images(spark):
+    rows = [
+        (i, "image", encode_png(_image(i)), ("png", 16 + i, 8 + i, None, None))
+        for i in range(1, 21)
+    ]
+    return spark.createDataFrame(rows, MEDIA).repartition(4).cache()
+
+
+@pytest.fixture(scope="module")
+def videos(spark):
+    rows = [
+        (i, "video", encode_avi_mjpeg(_frames(i), quality=90), ("avi", 16, 16, None, None))
+        for i in range(1, 6)
+    ]
+    return spark.createDataFrame(rows, MEDIA).repartition(2).cache()
+
+
+def test_decode_media_schema_and_determinism(images):
+    feats = decode_media(images, feature_dims=8)
     assert feats.schema == IMAGE_FEATURES
     rows = {r.media_id: r for r in feats.collect()}
     assert len(rows) == 20
-    # deterministic: same bytes -> same fake stats, across partitions/runs
-    again = {r.media_id: r for r in decode_media(media, feature_dims=8).collect()}
+    # deterministic: same bytes -> same stats, across partitions/runs
+    again = {r.media_id: r for r in decode_media(images, feature_dims=8).collect()}
     assert all(rows[k] == again[k] for k in rows)
     assert all(len(r.feature) == 8 for r in rows.values())
-    assert all(16 <= r.width < 80 for r in rows.values())
+    assert all((r.width, r.height) == (16 + k, 8 + k) for k, r in rows.items())
+    assert rows[3].mean_luma == pytest.approx(_image(3).mean() / 255.0)
 
 
 def test_real_decode_quarantines_undecodable_blobs(media):
-    """fake=False is a REAL PNG codec now (operators/codecs.py); these
-    fixture blobs are not PNGs, so every row keeps its id with NULL
-    stats (decode_media) or drops (resize_images) — the quarantine
-    shape, never an exception mid-job."""
-    feats = decode_media(media, fake=False).collect()
+    """These fixture blobs are not images, so every row keeps its id
+    with NULL stats (decode_media) or drops (resize_images) — the
+    quarantine shape, never an exception mid-job."""
+    feats = decode_media(media).collect()
     assert len(feats) == 20
     assert all(r.width is None and r.feature is None for r in feats)
-    assert resize_images(media, 32, 32, fake=False).count() == 0
+    assert resize_images(media, 32, 32).count() == 0
 
 
-def test_resize_preserves_ids_and_changes_bytes(media):
-    resized = resize_images(media, 32, 32)
+def test_resize_preserves_ids_and_changes_bytes(images):
+    # 7x5 is smaller than every input, so every row really resamples
+    resized = resize_images(images, 7, 5)
     rows = resized.collect()
-    assert len(rows) == 20
-    assert all(len(r.content) == 16 for r in rows)  # digest-sized fake
+    assert sorted(r.media_id for r in rows) == list(range(1, 21))
+    for r in rows:
+        px = decode_png(bytes(r.content))
+        assert px.shape[:2] == (5, 7)
+        assert bytes(r.content) != encode_png(_image(r.media_id))
 
 
-def test_sample_frames_flatmap(media):
-    frames = sample_frames(media, frame_bytes=100, every_n=2)
+def test_sample_frames_flatmap(videos):
+    frames = sample_frames(videos, every_n=2)
     assert frames.schema == FRAME_SAMPLES
     by_id = frames.groupBy("media_id").count().collect()
-    # row 1 has 301 bytes -> 3 frames -> sampled idx {0, 2} = 2 rows
+    # video i has i frames -> sampled idx {0, 2, ...} = ceil(i / 2) rows
     counts = {r.media_id: r["count"] for r in by_id}
-    assert counts[1] == 2
-    # frame digests match a direct recomputation (plumbing is faithful)
-    r = frames.filter((F.col("media_id") == 1) & (F.col("frame_idx") == 0)).collect()[0]
-    assert r.frame_digest == hashlib.md5((bytes([1]) * 301)[:100]).hexdigest()
+    assert counts == {i: (i + 1) // 2 for i in range(1, 6)}
+    # frame digests are of the decoded pixels (plumbing is faithful)
+    r = frames.filter((F.col("media_id") == 3) & (F.col("frame_idx") == 2)).collect()[0]
+    jpeg = encode_jpeg(_frames(3)[2], quality=90)
+    assert r.frame_digest == hashlib.md5(decode_jpeg(jpeg).tobytes()).hexdigest()
 
 
 def test_sniff_format_on_genuine_magic_bytes(spark):

@@ -5,21 +5,15 @@
    must agree bit-for-bit with the fit's kernel and keep Python out of
    its plan.
 2. The bounded-collect guards are real raises (survive ``python -O``),
-   and the driver-finish threshold is session-conf overridable
-   (``spark.oic.localFinishMaxEdges``) so a real cluster can tune it —
-   including 0 to keep every round distributed. The override must not
-   change results, only the execution route.
+   and a driver-finish threshold of 0 keeps every round distributed.
+   The threshold must not change results, only the execution route.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
-from oic_options_chains_spark.operators.clusters import (
-    LOCAL_FINISH_CONF_KEY,
-    LOCAL_FINISH_MAX_EDGES,
-    connected_components,
-    local_finish_max_edges,
-)
+from oic_options_chains_spark.operators import clusters
+from oic_options_chains_spark.operators.clusters import connected_components
 from oic_options_chains_spark.operators.kmeans import (
     _assign_clusters_vectorized,
     assign_cells,
@@ -70,26 +64,20 @@ class TestLocalFinishConf:
         rows = [(1, 2), (2, 3), (5, 6), (8, 9), (9, 10), (3, 11)]
         return spark.createDataFrame(rows, "doc_a bigint, doc_b bigint")
 
-    def test_default_bound(self, spark):
-        assert local_finish_max_edges(spark) == LOCAL_FINISH_MAX_EDGES
-
-    def test_override_zero_keeps_rounds_distributed_same_labels(self, spark):
+    def test_override_zero_keeps_rounds_distributed_same_labels(
+        self, spark, monkeypatch
+    ):
         pairs = self._pairs(spark)
         base = sorted(
             (r.id, r.cluster_id) for r in connected_components(pairs).collect()
         )
-        spark.conf.set(LOCAL_FINISH_CONF_KEY, "0")
-        try:
-            assert local_finish_max_edges(spark) == 0
-            dist = sorted(
-                (r.id, r.cluster_id)
-                for r in connected_components(pairs).collect()
-            )
-        finally:
-            spark.conf.unset(LOCAL_FINISH_CONF_KEY)
+        monkeypatch.setattr(clusters, "LOCAL_FINISH_MAX_EDGES", 0)
+        dist = sorted(
+            (r.id, r.cluster_id) for r in connected_components(pairs).collect()
+        )
         assert base == dist
 
-    def test_override_applies_to_kcore(self, spark):
+    def test_override_applies_to_kcore(self, spark, monkeypatch):
         from oic_options_chains_spark.operators.graph import kcore_membership
 
         edges = spark.createDataFrame(
@@ -102,16 +90,11 @@ class TestLocalFinishConf:
             (r.node, r.in_core, r.core_degree)
             for r in kcore_membership(nodes, edges, k=2, rounds=4).collect()
         )
-        spark.conf.set(LOCAL_FINISH_CONF_KEY, "0")
-        try:
-            dist = sorted(
-                (r.node, r.in_core, r.core_degree)
-                for r in kcore_membership(
-                    nodes, edges, k=2, rounds=4
-                ).collect()
-            )
-        finally:
-            spark.conf.unset(LOCAL_FINISH_CONF_KEY)
+        monkeypatch.setattr(clusters, "LOCAL_FINISH_MAX_EDGES", 0)
+        dist = sorted(
+            (r.node, r.in_core, r.core_degree)
+            for r in kcore_membership(nodes, edges, k=2, rounds=4).collect()
+        )
         assert base == dist
 
 

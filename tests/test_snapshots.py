@@ -445,7 +445,8 @@ class TestMultiTableCommits:
         good = spark.createDataFrame([(1,)], "id bigint")
 
         class Boom:
-            def localCheckpoint(self, eager=True):
+            @property
+            def write(self):
                 raise RuntimeError("staging failed")
 
         # sorted order stages 'a_good' first, then fails on 'b_boom':
