@@ -7,11 +7,11 @@ order is expiration/strike ascending in the source files, so the window
 tie-break is (distance ASC, candidate ASC): deterministic and
 order-independent under any partitioning.
 
-Scale notes: candidates are first made distinct per group (tiny — distinct
-expirations/strikes, not fact rows), the target list is a literal array
-exploded JVM-side, and the distinct x targets cross product is resolved with
-one window; the fact table is then re-joined on the winning value, which
-Catalyst plans as a broadcast semi-join at any scale.
+Scale notes: ``nearest_selection`` (queries) resolves distinct candidates x
+broadcast targets with one window; callers join the winners back.
+``nearest_rows`` (the daily chain) keeps the rows in place: each target's
+argmin is a ``min(struct(distance, value))`` over one unordered window on
+the group, so the input is read once and crosses one exchange.
 """
 
 from __future__ import annotations
@@ -76,4 +76,35 @@ def nearest_date_selection(
         targets,
         target_col,
         distance=F.abs(F.datediff(F.col(date_col), F.col(target_col))),
+    )
+
+
+def nearest_rows(
+    df: DataFrame,
+    group_cols: Sequence[str],
+    value_col: str,
+    targets: Sequence[str],
+    distance: str = "abs({value} - {target})",
+) -> DataFrame:
+    """Rows of ``df`` (its columns, each row once) whose ``value_col`` is,
+    within its group, the nearest value to at least one of ``targets``.
+
+    ``targets`` are SQL expressions over ``df``'s columns and ``distance``
+    is a SQL template over ``{value}`` and ``{target}``: as Column trees,
+    27 targets cost more py4j round trips than the selection saves. Ties go
+    to the smaller value, as in ``nearest_selection``; a NULL distance (NULL
+    value or target) never wins.
+    """
+    v = f"`{value_col}`"
+    over = "OVER (PARTITION BY " + ", ".join(f"`{c}`" for c in group_cols) + ")"
+    winners = []
+    for t in targets:
+        d = distance.format(value=v, target=f"({t})")
+        winners.append(
+            f"(min(CASE WHEN {d} IS NOT NULL THEN struct({d} AS d, {v} AS v) END) {over}).v"
+        )
+    return (
+        df.selectExpr("*", f"array({', '.join(winners)}) AS __won")
+        .where(f"array_contains(__won, {v})")
+        .drop("__won")
     )

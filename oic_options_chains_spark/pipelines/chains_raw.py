@@ -12,19 +12,19 @@ declarative plan:
 3. as-of mark price per symbol from ``ohlc`` (J2),
 4. exact-decimal strike targets (mark x era multipliers) and expiry
    targets (folder date + era week offsets) (F20/F15),
-5. nearest-expiry then nearest-strike selection per symbol (J3/J4),
+5. nearest-expiry then nearest-strike window argmins per symbol (J3/J4),
 6. normalize (enum map, ivint/100, trunc(greek, 4)) into the
    ``option_chain`` schema (F25/F3/F22).
 
-Scale: the scan parallelizes across files; the only shuffles are the two
-selection windows keyed on (symbol, target) and the final PK dedup — all
-prunable to one date partition. Target tables are broadcast.
+Scale: the scan parallelizes across files and runs once; one exchange on
+``act_symbol`` serves the expiry window, the strike window (per symbol and
+expiration) and the final PK dedup, all prunable to one date partition.
+Mark prices are broadcast.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,13 +32,9 @@ from pyspark.sql import types as T
 
 from oic_options_chains_spark.functions.cleaning import enum_map
 from oic_options_chains_spark.functions.decimal_ops import trunc_n
-from oic_options_chains_spark.functions.literals import values_df
 from oic_options_chains_spark.operators.asof import latest_per_key
 from oic_options_chains_spark.operators.dedup import dedup_by_key
-from oic_options_chains_spark.operators.nearest import (
-    nearest_date_selection,
-    nearest_selection,
-)
+from oic_options_chains_spark.operators.nearest import nearest_rows
 from oic_options_chains_spark.parse.eras import Era, era_for_date
 from oic_options_chains_spark.schemas import (
     CHAIN_RAW,
@@ -74,9 +70,13 @@ def read_chain_files(
 
 def explode_sides(raw: DataFrame) -> DataFrame:
     """Wide call_*/put_* strike rows -> long call/put rows (F29), dropping
-    rows missing either side (P10, transform-load.2025-08-19.rkt:128,143)."""
+    rows missing either side (P10, transform-load.2025-08-19.rkt:128,143)
+    and rows without a readable expiration or strike, which could neither
+    be selected nor keyed (a bad date is NULL, not a failed day: T5)."""
+    expiration = F.try_to_date(F.col("expirationdate"))
     both = raw.filter(
         F.col("call_optionsymbol").isNotNull() & F.col("put_optionsymbol").isNotNull()
+        & expiration.isNotNull() & F.col("strike").isNotNull()
     )
     sides = F.array(
         *[
@@ -89,7 +89,7 @@ def explode_sides(raw: DataFrame) -> DataFrame:
     )
     return both.select(
         "act_symbol",
-        F.to_date(F.col("expirationdate")).alias("expiration"),
+        expiration.alias("expiration"),
         F.col("strike"),
         F.explode(sides).alias("s"),
     ).select("act_symbol", "expiration", "strike", "s.*")
@@ -110,43 +110,22 @@ def select_chain(
     long_df: DataFrame, marks: DataFrame, ingest_date: dt.date, era: Era
 ) -> DataFrame:
     """Nearest-expiry then nearest-strike selection (J3/J4), keeping every
-    side at each winning (expiration, strike)."""
-    spark = long_df.sparkSession
-    expiry_targets = values_df(
-        spark,
-        "target_date",
-        [ingest_date + dt.timedelta(weeks=w) for w in era.week_offsets],
-        "date",
+    side at each winning (expiration, strike). Symbols without a mark are
+    dropped (transform-load.2025-08-19.rkt:163-169)."""
+    at_expiry = nearest_rows(
+        long_df,
+        ["act_symbol"],
+        "expiration",
+        [f"DATE'{ingest_date + dt.timedelta(weeks=w)}'" for w in era.week_offsets],
+        distance="abs(datediff({value}, {target}))",
     )
-    expirations = long_df.select("act_symbol", "expiration").distinct()
-    expiry_winners = nearest_date_selection(
-        expirations, ["act_symbol"], "expiration", expiry_targets, "target_date"
-    ).select("act_symbol", "expiration").distinct()
-
-    at_expiry = long_df.join(
-        F.broadcast(expiry_winners), on=["act_symbol", "expiration"], how="left_semi"
-    )
-
-    mults = values_df(
-        spark, "mult", [Decimal(m) for m in era.strike_multipliers], "decimal(6,4)"
-    )
-    strike_targets = marks.crossJoin(F.broadcast(mults)).select(
-        "act_symbol", (F.col("mark_price") * F.col("mult")).alias("target_strike")
-    )
-    strikes = at_expiry.select("act_symbol", "expiration", "strike").distinct()
-    strike_winners = nearest_selection(
-        strikes,
+    marked = at_expiry.join(F.broadcast(marks), on="act_symbol", how="inner")
+    return nearest_rows(
+        marked,
         ["act_symbol", "expiration"],
         "strike",
-        strike_targets,
-        "target_strike",
-    ).select("act_symbol", "expiration", "strike").distinct()
-
-    return at_expiry.join(
-        F.broadcast(strike_winners),
-        on=["act_symbol", "expiration", "strike"],
-        how="left_semi",
-    )
+        [f"mark_price * CAST({m} AS DECIMAL(6,4))" for m in era.strike_multipliers],
+    ).drop("mark_price")
 
 
 def normalize_chain(selected: DataFrame, ingest_date: dt.date, era: Era) -> DataFrame:

@@ -142,18 +142,88 @@ def test_compact_partition(spark, raw_zone, ohlc, tmp_path):
     assert before == after
 
 
+def test_chain_day_ties_across_symbols(spark, tmp_path):
+    """Exact rows over two symbols with different marks and grids. AAA's
+    2025-09-01/09-03 straddle the +2-week target and its 69/71 the 0.70 x
+    100 target: the earlier expiry and the smaller strike win (the
+    reference's first-in-parse-order fold). 09-16 wins the three later
+    targets, 75 wins 0.75-0.875 (87.5 is a 75/100 tie). BBB has its own
+    mark and a different strike grid per expiration; CCC has no mark."""
+    from oic_options_chains_spark.pipelines.chains_raw import chain_day
+
+    grids = {
+        "AAA": {e: ["69", "71", "75", "100", "130", "200"]
+                for e in ("2025-09-01", "2025-09-03", "2025-09-16")},
+        "BBB": {
+            "2025-08-20": ["40", "50", "60", "100"],
+            "2025-09-30": ["40", "50", "60", "100"],
+            "2025-10-20": ["45", "55"],
+            "2025-12-31": ["50"],
+        },
+        "CCC": {"2025-09-02": ["100"]},
+    }
+    day = tmp_path / INGEST.isoformat()
+    day.mkdir()
+    for sym, grid in grids.items():
+        rows = [_row(e, s) for e, strikes in grid.items() for s in strikes]
+        (day / f"{sym}.json").write_text(json.dumps(rows))
+    ohlc = spark.createDataFrame(
+        [
+            ("AAA", dt.date(2025, 8, 18), Decimal("100.000")),
+            ("BBB", dt.date(2025, 8, 18), Decimal("50.000")),
+        ],
+        OHLC,
+    )
+
+    got = sorted(
+        (r.act_symbol, r.expiration.isoformat(), r.strike, r.call_put)
+        for r in chain_day(spark, str(tmp_path), ohlc, INGEST).collect()
+    )
+    winners = {
+        "AAA": {e: ["69", "75", "100", "130"] for e in ("2025-09-01", "2025-09-16")},
+        "BBB": {
+            "2025-08-20": ["40", "50", "60"],
+            "2025-09-30": ["40", "50", "60"],
+            "2025-10-20": ["45", "55"],
+        },
+    }
+    want = sorted(
+        (sym, e, Decimal(s).quantize(Decimal("0.001")), side)
+        for sym, grid in winners.items()
+        for e, strikes in grid.items()
+        for s in strikes
+        for side in ("Call", "Put")
+    )
+    assert got == want
+
+
 def test_corrupt_json_file_is_tolerated(spark, ohlc, tmp_path):
-    """A malformed chain file must not fail the day (T5): PERMISSIVE JSON
-    parsing yields null-field rows, which the both-sides filter drops."""
+    """A malformed chain file or row must not fail the day (T5): PERMISSIVE
+    JSON parsing yields null-field rows, which the both-sides filter drops;
+    an unreadable expiration date or a NULL strike drops only its row, with
+    or without selection (a NULL strike must not win the nearest-strike
+    targets of its expiry)."""
     from oic_options_chains_spark.pipelines.chains_raw import chain_day
 
     day = tmp_path / INGEST.isoformat()
     day.mkdir()
-    (day / "AAA.json").write_text(json.dumps([_row(EXPIRIES[0], "100")]))
+    bad_date = _row(EXPIRIES[0], "90")
+    bad_date["expirationdate"] = "garbage"
+    no_strike = _row(EXPIRIES[0], "90")
+    no_strike["strike"] = None
+    rows = [_row(EXPIRIES[0], "100"), _row(EXPIRIES[1], "100"), bad_date, no_strike]
+    (day / "AAA.json").write_text(json.dumps(rows))
     (day / "EVIL.json").write_text("{ not json at all")
     (day / "EMPTY.json").write_text("[]")
 
     out = chain_day(spark, str(tmp_path), ohlc, INGEST)
-    rows = out.collect()
-    assert {r.act_symbol for r in rows} == {"AAA"}
-    assert len(rows) == 2
+    got = sorted((r.act_symbol, r.expiration.isoformat(), r.call_put) for r in out.collect())
+    assert got == [
+        ("AAA", e, side) for e in EXPIRIES[:2] for side in ("Call", "Put")
+    ]
+    assert {r.strike for r in out.collect()} == {Decimal("100.000")}
+    # without selection too: no row with a NULL key reaches the table
+    every = chain_day(spark, str(tmp_path), ohlc, INGEST, all_options=True)
+    assert sorted((r.expiration.isoformat(), r.strike, r.call_put) for r in every.collect()) == [
+        (e, Decimal("100.000"), side) for e in EXPIRIES[:2] for side in ("Call", "Put")
+    ]

@@ -14,10 +14,10 @@ from __future__ import annotations
 
 from decimal import Decimal
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
-from oic_options_chains_spark.operators.nearest import nearest_selection
+from oic_options_chains_spark.operators.nearest import nearest_rows, nearest_selection
 
 _case = st.tuples(
     st.lists(st.integers(-1000, 1000), min_size=1, max_size=8, unique=True),
@@ -57,6 +57,72 @@ def test_nearest_selection_invariants(spark, cases):
             assert value == Decimal(best)
             assert distance == abs(Decimal(best) - Decimal(t))
             assert all(distance <= abs(Decimal(v) - Decimal(t)) for v in cands)
+
+
+# One group: its values (each carried by one to three rows, the call/put
+# sides; None is a NULL value) and its per-group target (None is NULL).
+# Small ranges make distance ties and shared winners common.
+_group = st.tuples(
+    st.lists(
+        st.tuples(st.one_of(st.none(), st.integers(-20, 20)), st.integers(1, 3)),
+        min_size=1,
+        max_size=8,
+    ),
+    st.one_of(st.none(), st.integers(-20, 20)),
+)
+
+
+def _nearest_rows_reference(groups, shared):
+    """Pure-Python nearest_rows: per group, the winner of every target is
+    the value minimizing (|value - target|, value); NULL values and NULL
+    targets never win."""
+    kept = []
+    for g, (values, own) in enumerate(groups):
+        present = {v for v, _ in values if v is not None}
+        winners = {
+            min(present, key=lambda v: (abs(v - t), v))
+            for t in [*shared, own]
+            if t is not None and present
+        }
+        kept += [
+            (g, v, side)
+            for v, n_sides in values
+            if v in winners
+            for side in range(n_sides)
+        ]
+    return sorted(kept)
+
+
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    st.lists(_group, min_size=1, max_size=6),
+    st.lists(st.integers(-20, 20), min_size=1, max_size=4),
+)
+# ties (4 is as far from 3 as from 5; the smaller wins), two targets that
+# share a winner (-1 and 0 both pick 0; its rows are kept once), a NULL
+# target, a NULL value and a group whose only target is NULL
+@example(
+    groups=[([(3, 2), (5, 2), (0, 2), (None, 1)], None), ([(7, 1)], 7)],
+    shared=[4, -1, 0],
+)
+@example(groups=[([(1, 2), (2, 2)], None)], shared=[])
+def test_nearest_rows_matches_reference(spark, groups, shared):
+    rows = [
+        (g, v, side, own)
+        for g, (values, own) in enumerate(groups)
+        for v, n_sides in values
+        for side in range(n_sides)
+    ]
+    df = spark.createDataFrame(rows, "g int, value int, side int, own int")
+    got = nearest_rows(df, ["g"], "value", [*map(str, shared), "own"])
+    assert got.columns == df.columns
+    assert sorted((r.g, r.value, r.side) for r in got.collect()) == (
+        _nearest_rows_reference(groups, shared)
+    )
 
 
 @settings(

@@ -15,6 +15,12 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _final(df) -> str:
+    """The executed adaptive plan of a run ``df`` without its initial-plan
+    section, so each operator counts once."""
+    return _plan(df).split("== Initial Plan ==")[0]
+
+
 def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
@@ -699,3 +705,55 @@ def test_epoch_screen_compositions_have_no_fused_filter(spark, sf_dir, tmp_path)
             if re.match(r"\s*[+:]*-? *Filter ", line) and len(line) > 4000
         ]
         assert not fused, (name, fused)
+
+
+def test_chain_day_parses_the_day_once(spark, tmp_path):
+    """The day's chain selection keeps its rows in place (per-symbol window
+    argmins): the executed plan scans the raw JSON once and has no
+    semi-join back onto it."""
+    import datetime as dt
+    import json
+    from decimal import Decimal
+
+    from oic_options_chains_spark.pipelines.chains_raw import chain_day
+    from oic_options_chains_spark.schemas import OHLC
+    from tests.test_chains_raw import _row
+
+    ingest = dt.date(2025, 8, 19)
+    day = tmp_path / ingest.isoformat()
+    day.mkdir()
+    for sym in ("AAA", "BBB"):
+        rows = [_row(e, s) for e in ("2025-09-02", "2025-09-30") for s in ("90", "100", "110")]
+        (day / f"{sym}.json").write_text(json.dumps(rows))
+    ohlc = spark.createDataFrame(
+        [(s, dt.date(2025, 8, 18), Decimal("100.000")) for s in ("AAA", "BBB")], OHLC
+    )
+    df = chain_day(spark, str(tmp_path), ohlc, ingest)
+    assert len(df.collect()) == 2 * 2 * 3 * 2
+    plan = _final(df)
+    assert plan.count("FileScan json") == 1, plan
+    assert "LeftSemi" not in plan, plan
+
+
+def test_chain_day_html_runs_two_kernels(spark, tmp_path):
+    """The legacy HTML chain build runs the page kernel once for the long
+    rows and once for the marks; the selection adds no kernel pass."""
+    import datetime as dt
+
+    from oic_options_chains_spark.pipelines.chains_raw import chain_day_html
+    from tests.fixtures.html_chains import build_chains_page
+
+    ingest = dt.date(2022, 6, 1)
+    day = tmp_path / ingest.isoformat()
+    day.mkdir()
+    for sym, mark in (("AAA", "100.00"), ("BBB", "50.00")):
+        (day / f"{sym}.html").write_text(
+            build_chains_page(
+                "2022-04-29", symbol=sym, mark=mark,
+                expiries=("220615", "220629"), strikes=(40.0, 50.0, 100.0),
+            )
+        )
+    df = chain_day_html(spark, str(tmp_path), ingest)
+    assert df.collect()
+    plan = _final(df)
+    assert plan.count("MapInPandas") <= 2, plan
