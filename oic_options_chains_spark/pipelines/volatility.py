@@ -43,20 +43,26 @@ def read_history_pages(
     )
 
 
-def read_good_pages(
-    spark: SparkSession, base_dir: str, ingest_date: dt.date, era: Era
-) -> DataFrame:
-    """The day's pages minus the reference's bad-page skip (P9)."""
-    pages = read_history_pages(spark, base_dir, ingest_date)
+def good_pages(pages: DataFrame, era: Era) -> DataFrame:
+    """``pages`` minus the reference's bad-page skip (P9)."""
     return pages.filter(~is_bad_page(F.col("content"), era))
 
 
-def _history_cells(
+def read_good_pages(
     spark: SparkSession, base_dir: str, ingest_date: dt.date, era: Era
 ) -> DataFrame:
-    """The X1 kernel's raw cells + error channel over the good pages."""
-    good = read_good_pages(spark, base_dir, ingest_date, era)
-    return extract_history_cells(good, era)
+    """The day's pages minus the bad-page skip."""
+    return good_pages(read_history_pages(spark, base_dir, ingest_date), era)
+
+
+def history_from_pages(
+    pages: DataFrame, ingest_date: dt.date, era: Era
+) -> DataFrame:
+    """One ingest day's ``(act_symbol, content)`` pages -> its
+    ``volatility_history`` rows: bad-page skip, X1 kernel, normalize. The
+    batch read and each streamed micro-batch day run this same transform."""
+    cells = extract_history_cells(good_pages(pages, era), era)
+    return normalize_history(cells, ingest_date, era)
 
 
 def vol_history(
@@ -67,8 +73,8 @@ def vol_history(
 ) -> DataFrame:
     """The day's parsed ``volatility_history`` DataFrame."""
     era = era or era_for_date(ingest_date)
-    cells = _history_cells(spark, base_dir, ingest_date, era)
-    return normalize_history(cells, ingest_date, era)
+    pages = read_history_pages(spark, base_dir, ingest_date)
+    return history_from_pages(pages, ingest_date, era)
 
 
 def vol_history_quarantine(
@@ -79,7 +85,8 @@ def vol_history_quarantine(
 ) -> DataFrame:
     """The failure channel (T5): pages that parsed badly, with the error."""
     era = era or era_for_date(ingest_date)
-    cells = _history_cells(spark, base_dir, ingest_date, era)
+    good = read_good_pages(spark, base_dir, ingest_date, era)
+    cells = extract_history_cells(good, era)
     return cells.filter(F.col("parse_error").isNotNull()).select(
         "act_symbol", "parse_error"
     )

@@ -28,10 +28,16 @@ def parse_weeklies_csv(
     spark: SparkSession, path: str, file_date: dt.date
 ) -> DataFrame:
     """Raw OCC CSV -> ``weekly`` batch rows (act_symbol, effective_date,
-    last_seen). Malformed lines (preamble, header, short rows) drop out
-    where the date fails to parse — the reference's exception-skip
-    (weeklies-transform-load.rkt:47-50) as a filter."""
-    lines = spark.read.text(path)
+    last_seen)."""
+    return weeklies_from_lines(spark.read.text(path), file_date)
+
+
+def weeklies_from_lines(lines: DataFrame, file_date: dt.date) -> DataFrame:
+    """One OCC file's text lines (``value``) -> its ``weekly`` batch rows.
+    Malformed lines (preamble, header, short rows) drop out where the date
+    fails to parse — the reference's exception-skip
+    (weeklies-transform-load.rkt:47-50) as a filter. The batch read and
+    each streamed micro-batch file date run this same transform."""
     parts = F.split(F.col("value"), ",")
     # F.get (not getItem): short/garbage lines yield NULL instead of the
     # ANSI out-of-bounds error, reproducing the reference's skip-on-error

@@ -4,8 +4,10 @@ The reference's tables live in PostgreSQL with composite PKs and
 ``ON CONFLICT DO NOTHING`` inserts (reference: schema.sql:23,
 transform-load.2025-08-19.rkt:209) — replays are free. Without an index,
 the same guarantee is an anti-join against the pruned existing partition
-before an append (SURVEY.md K1, operators/dedup.py), under the
-single-writer-per-partition discipline noted in SURVEY.md section 7.3.
+before an append (SURVEY.md K1, operators/dedup.py) made under a kernel
+file lock per date partition: concurrent writers on one host serialize
+per date, a crashed writer's locks vanish with it, and a lock file
+removed or replaced from outside aborts the write (``LockLostError``).
 
 Scale: the table is ``partitionBy(date)`` (the reference's dated-folder
 layout made durable); an incoming day prunes the existing side to one
@@ -19,16 +21,16 @@ the logical plan is identical.
 from __future__ import annotations
 
 import contextlib
+import fcntl
 import os
-import threading
 import time
-import uuid
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oic_options_chains_spark.operators.dedup import conflict_ignore_append, dedup_by_key
+from oic_options_chains_spark.operators.metrics import observed_counts
 
 
 def table_exists(table_dir: str) -> bool:
@@ -54,9 +56,6 @@ def read_table(
 
 
 LOCK_DIR = "_locks"
-# An append holding a date lock longer than this is presumed crashed and
-# its lock may be stolen. Generous vs a single-day batch (seconds).
-LOCK_LEASE_SEC = 600.0
 LOCK_WAIT_SEC = 120.0
 # A daily batch carries one date (a backfill a handful); crossing this
 # means the caller passed an unbatched historical load — split it.
@@ -64,150 +63,84 @@ MAX_LOCKED_DATES = 1000
 
 
 class LockLostError(RuntimeError):
-    """A held partition lock was dispossessed (the holder's lock inode no
-    longer lives at the lock path — a stealer decided this holder was
-    dead). The safe response is to abort before the write and retry."""
+    """A held lock's file was removed or replaced at its path from outside
+    ``_partition_locks``; the safe response is to abort the write and retry."""
+
+
+def _is_ours(path: str, fd: int) -> bool:
+    try:
+        return os.stat(path).st_ino == os.fstat(fd).st_ino
+    except OSError:
+        return False
 
 
 class _LockGuard:
-    """Inode-identity view of the locks a holder believes it owns.
-
-    Each acquired lock keeps its O_EXCL-created file OPEN: the heartbeat
-    refreshes mtime THROUGH THE FD (``os.utime(fd)``), so a lock mid-way
-    through a stealer's rename/restore window still looks live (its inode
-    mtime keeps moving even while the name is parked at the stealer's
-    grave path), and ``verify()`` compares ``fstat(fd).st_ino`` against
-    ``stat(path).st_ino`` — the only authoritative "do I still hold it"
-    check. A transient mismatch (the restore window) is ridden out with
-    brief retries; a persistent one raises ``LockLostError``.
-    """
+    """The ``(path, fd)`` of every date lock a holder owns."""
 
     def __init__(self) -> None:
-        self.held: list[tuple[str, int]] = []  # (path, fd)
+        self.held: list[tuple[str, int]] = []
 
-    def verify(self, retries: int = 20, pause: float = 0.05) -> None:
+    def verify(self) -> None:
+        """Raise ``LockLostError`` unless each held inode still lives at its path."""
         for path, fd in self.held:
-            my_ino = os.fstat(fd).st_ino
-            for attempt in range(retries):
-                try:
-                    if os.stat(path).st_ino == my_ino:
-                        break
-                except OSError:
-                    pass
-                if attempt == retries - 1:
-                    raise LockLostError(
-                        f"partition lock {path} was stolen from this holder"
-                    )
-                time.sleep(pause)
+            if not _is_ours(path, fd):
+                raise LockLostError(f"partition lock {path} was replaced under this holder")
+
+
+def _lock_file(path: str, wait_sec: float) -> int:
+    """An fd holding ``flock(LOCK_EX)`` on the file that lives at ``path``."""
+    deadline = time.monotonic() + wait_sec
+    while True:
+        fd = os.open(path, os.O_CREAT | os.O_RDWR)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except BlockingIOError:
+            os.close(fd)
+            if time.monotonic() > deadline:
+                raise TimeoutError(f"partition lock {path} held past {wait_sec}s") from None
+            time.sleep(0.05)
+        else:
+            if _is_ours(path, fd):
+                return fd
+            os.close(fd)  # the holder we waited on unlinked this inode on release
 
 
 @contextlib.contextmanager
 def _partition_locks(
-    table_dir: str,
-    dates: Sequence[str],
-    lease_sec: float = LOCK_LEASE_SEC,
-    wait_sec: float = LOCK_WAIT_SEC,
+    table_dir: str, dates: Sequence[str], wait_sec: float = LOCK_WAIT_SEC
 ) -> Iterator[_LockGuard]:
-    """Per-date-partition mutex via put-if-absent lock files (O_EXCL,
-    the same atomic primitive as the snapshot OCC log): the loser of a
-    race WAITS and retries, then re-reads the partition — so its
-    duplicate rows anti-join away against the winner's committed rows.
-    This is what turns append_day's read-antijoin-append from
-    "single-writer-per-partition discipline" into the reference's
-    actual guarantee (PK uniqueness under concurrent inserts,
-    schema.sql:23 ON CONFLICT DO NOTHING).
+    """Per-date-partition mutex: an exclusive ``flock`` on
+    ``<table_dir>/_locks/<date>.lock``. The loser of a race WAITS (polling
+    every 50 ms, ``TimeoutError`` after ``wait_sec``), then re-reads the
+    partition — so its duplicate rows anti-join away against the winner's
+    committed rows. This is the reference's PK uniqueness under
+    concurrent inserts (schema.sql:23 ON CONFLICT DO NOTHING).
 
     Dates are acquired in sorted order (no deadlock between writers
-    locking overlapping date sets). A HEARTBEAT thread refreshes the
-    mtime of every held lock at ``lease_sec / 4``, so a live holder —
-    however long its append runs — never looks stale. A lock file whose
-    mtime is older than ``lease_sec`` is therefore a crashed writer's;
-    it is stolen by an atomic RENAME to a per-stealer unique name
-    (rename succeeds for exactly one stealer — unlike unlink, a second
-    stealer cannot also remove a lock the first stealer has already
-    replaced), and the stolen inode is re-checked: if it is not the
-    stale inode the stealer statted (the path was released and
-    re-acquired by a live writer in between), the live lock is restored
-    via ``os.link`` (put-if-absent) and the steal retried. If that
-    restore loses a THIRD race (another waiter O_EXCL-created the path
-    inside the rename window), the grave is still unlinked — but the
-    dispossessed holder is not silently betrayed: holders heartbeat
-    through their OPEN FD and re-verify their inode before committing
-    (``_LockGuard.verify`` in ``append_day``), so a holder whose name
-    was taken aborts with ``LockLostError`` instead of writing under a
-    lock someone else now owns, and its release never unlinks the new
-    owner's file (inode-guarded)."""
+    locking overlapping date sets). The kernel drops a ``flock`` when its
+    holder exits, SIGKILL included, so a crashed writer frees its dates
+    at once and a live holder is never dispossessed. A lock counts only
+    while its inode still lives at the path: release unlinks the path
+    (only while it is still the holder's inode) before closing, and a
+    waiter that then wins the orphaned inode re-opens the path.
+
+    Scope: writers on one host sharing a local POSIX filesystem with the
+    table. The lock belongs to the open file description, so threads of
+    one process exclude each other as separate processes do."""
     d = os.path.join(table_dir, LOCK_DIR)
     os.makedirs(d, exist_ok=True)
     guard = _LockGuard()
-    stop = threading.Event()
-
-    def _heartbeat() -> None:
-        while not stop.wait(lease_sec / 4):
-            for _p, fd in list(guard.held):
-                with contextlib.suppress(OSError):
-                    os.utime(fd)
-
-    beat = threading.Thread(target=_heartbeat, daemon=True)
-    beat.start()
-    token = uuid.uuid4().hex
     try:
         for date in sorted(set(dates)):
             path = os.path.join(d, f"{date}.lock")
-            deadline = time.monotonic() + wait_sec
-            while True:
-                try:
-                    fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                    guard.held.append((path, fd))
-                    break
-                except FileExistsError:
-                    try:
-                        st = os.stat(path)
-                    except OSError:
-                        continue  # holder just released; re-race
-                    if time.time() - st.st_mtime > lease_sec:
-                        grave = f"{path}.steal-{token}"
-                        try:
-                            os.rename(path, grave)
-                        except OSError:
-                            continue  # lost the steal race; re-race
-                        try:
-                            stolen_live = (
-                                os.stat(grave).st_ino != st.st_ino
-                                and time.time() - os.path.getmtime(grave)
-                                <= lease_sec
-                            )
-                        except OSError:
-                            stolen_live = False
-                        if stolen_live:
-                            # grabbed a freshly re-acquired lock, not the
-                            # stale one: put it back. If ANOTHER waiter
-                            # claimed the path inside the window the link
-                            # fails and the grave is dropped anyway — the
-                            # dispossessed holder detects the inode swap
-                            # at verify() and aborts, so two writers never
-                            # both commit under this name.
-                            with contextlib.suppress(OSError):
-                                os.link(grave, path)
-                        with contextlib.suppress(OSError):
-                            os.unlink(grave)
-                        continue  # re-race via O_EXCL
-                    if time.monotonic() > deadline:
-                        raise TimeoutError(
-                            f"partition lock {path} held past {wait_sec}s"
-                        ) from None
-                    time.sleep(0.05)
+            guard.held.append((path, _lock_file(path, wait_sec)))
         yield guard
     finally:
-        stop.set()
         for path, fd in guard.held:
-            with contextlib.suppress(OSError):
-                # inode-guarded release: only remove the name if it still
-                # refers to OUR lock file — never a successor holder's
-                if os.stat(path).st_ino == os.fstat(fd).st_ino:
+            if _is_ours(path, fd):
+                with contextlib.suppress(OSError):
                     os.unlink(path)
-            with contextlib.suppress(OSError):
-                os.close(fd)
+            os.close(fd)
 
 
 def append_day(
@@ -217,14 +150,10 @@ def append_day(
     pk: Sequence[str],
     date_col: str = "date",
     cluster_by: Sequence[str] = (),
-    return_count: bool = False,
-) -> int | None:
+) -> int:
     """Idempotent single-date append: in-batch PK dedup, anti-join against
-    the existing date partition(s), then a partitioned append.
-
-    The existing side is filtered with a semi-join on the incoming dates,
-    so partition pruning keeps the read to the replayed day regardless of
-    table size.
+    the existing date partition(s), then a partitioned append. Returns
+    the appended row count (0 for a replay), observed on the write.
 
     ``cluster_by`` (typically ``["act_symbol"]``) hash-repartitions and
     sorts rows inside each date partition before the write, so parquet
@@ -232,15 +161,15 @@ def append_day(
     — the poor man's Z-order for the reference's dominant access pattern
     (one symbol, one day) without requiring a table format.
 
-    Concurrency: the read-antijoin-append runs under per-date partition
-    LOCKS (``_partition_locks``) — two writers racing on the same day
-    serialize, the loser re-reads the winner's committed rows, and PK
-    uniqueness holds like the reference's ON CONFLICT DO NOTHING under
-    concurrent inserts. The batch's distinct dates are collected on the
-    driver for this (bounded: a daily batch has one date, a backfill a
-    handful; tripwired at ``MAX_LOCKED_DATES``) and double as partition
-    pruning literals — an IN-list on the partition column prunes at the
-    file listing, one step earlier than the previous semi-join.
+    Concurrency: the read-antijoin-append runs under per-date kernel
+    file locks (``_partition_locks``; writers on one host) — two writers
+    racing on the same day serialize, the loser re-reads the winner's
+    committed rows, and PK uniqueness holds like the reference's ON
+    CONFLICT DO NOTHING. Right before the write, ``verify()`` raises
+    ``LockLostError`` if a lock file was removed or replaced from
+    outside. The batch's distinct dates are collected on the driver for
+    this (bounded: tripwired at ``MAX_LOCKED_DATES``) and double as
+    partition pruning literals on the existing side.
     """
     batch = dedup_by_key(incoming, pk)
     # one computation of the (possibly expensive) incoming transform:
@@ -258,24 +187,15 @@ def append_day(
                 F.col(date_col).isin(date_vals)
             )
             batch = conflict_ignore_append(existing, batch, pk)
+        batch, appended = observed_counts(batch)
         if cluster_by:
+            # led by date, this meets the partitioned write's ordering: kept
             batch = batch.repartition(
                 *[F.col(c) for c in cluster_by]
-            ).sortWithinPartitions(*cluster_by)
-        if return_count:
-            # recon path (streaming per-batch counters): checkpoint so the
-            # count and the write share one computation of the anti-join
-            batch = batch.localCheckpoint(eager=True)
-            n = batch.count()
-            # last-moment dispossession check: if a stealer decided this
-            # holder was dead (heartbeat froze past the lease) the write
-            # must not race the new owner's anti-join
-            guard.verify()
-            batch.write.mode("append").partitionBy(date_col).parquet(table_dir)
-            return n
+            ).sortWithinPartitions(date_col, *cluster_by)
         guard.verify()
         batch.write.mode("append").partitionBy(date_col).parquet(table_dir)
-        return None
+    return appended.get["rows"]
 
 
 def write_bucketed(

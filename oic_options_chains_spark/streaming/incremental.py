@@ -29,12 +29,11 @@ plan as the batch path.
 
 from __future__ import annotations
 
-import datetime as dt
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from oic_options_chains_spark.operators.metrics import observed_counts
 from oic_options_chains_spark.parse.eras import era_for_date
 from oic_options_chains_spark.pipelines.chains_raw import chain_from_raw
 from oic_options_chains_spark.schemas import CHAIN_RAW, OPTION_CHAIN_PK
@@ -103,9 +102,8 @@ def run_incremental_chain_load(
 
     ``metrics_dir`` is the reference's per-run reconciliation counters
     (transform-load.2025-08-19.rkt:425-427) as a table: one row per
-    (ingest day, micro-batch) with raw/attempted/loaded counts. Spark's
-    ``observe()`` cannot surface metrics inside ``foreachBatch`` (py4j
-    limitation), so the counts are explicit — ``failed`` here means
+    (ingest day, micro-batch) with attempted/loaded/failed counts, both
+    observed during ``append_day``'s own jobs. ``failed`` means
     "attempted minus actually appended", i.e. replayed rows absorbed by
     conflict-ignore, the same quantity the reference's failure counter
     tracked under ON CONFLICT DO NOTHING."""
@@ -115,14 +113,11 @@ def run_incremental_chain_load(
             era = era_for_date(day)
             raw = batch.filter(F.col("ingest_date") == F.lit(day)).drop("ingest_date")
             curated = chain_from_raw(raw, ohlc, day, era, all_options=all_options)
+            curated, offered = observed_counts(curated)
+            loaded = append_day(spark, table_dir, curated, OPTION_CHAIN_PK)
             if metrics_dir is None:
-                append_day(spark, table_dir, curated, OPTION_CHAIN_PK)
                 continue
-            curated = curated.localCheckpoint(eager=True)
-            attempted = curated.count()
-            loaded = append_day(
-                spark, table_dir, curated, OPTION_CHAIN_PK, return_count=True
-            )
+            attempted = offered.get["rows"]
             spark.createDataFrame(
                 [(day, batch_id, attempted, loaded, attempted - loaded)],
                 "date date, batch_id long, attempted long, loaded long, failed long",
@@ -167,28 +162,16 @@ def run_incremental_vol_load(
     checkpoint_dir: str,
 ) -> None:
     """Drain unprocessed volatility pages into the warehouse table — the
-    same batch transform chain (bad-page filter -> X1 kernel -> relational
-    normalize) per micro-batch date."""
-    from oic_options_chains_spark.parse.html_vol import (
-        extract_history_cells,
-        is_bad_page,
-        normalize_history,
-    )
+    batch transform (``history_from_pages``) per micro-batch date."""
+    from oic_options_chains_spark.pipelines.volatility import history_from_pages
     from oic_options_chains_spark.schemas import VOLATILITY_HISTORY_PK
 
     def process(batch: DataFrame, _batch_id: int) -> None:
-        # NOTE: pyspark Observation.get is not supported inside
-        # foreachBatch (py4j toPyRow assertion) — reconciliation counters
-        # (operators/metrics.observed_counts) are a batch-pipeline tool.
         for day in _distinct_days(batch, "ingest_date"):
-            era = era_for_date(day)
             pages = batch.filter(F.col("ingest_date") == F.lit(day)).select(
                 "act_symbol", "content"
             )
-            good = pages.filter(~is_bad_page(F.col("content"), era))
-            curated = normalize_history(
-                extract_history_cells(good, era), day, era
-            )
+            curated = history_from_pages(pages, day, era_for_date(day))
             append_day(spark, table_dir, curated, VOLATILITY_HISTORY_PK)
 
     (
@@ -211,10 +194,14 @@ def run_incremental_weeklies_load(
     persisted ``weekly`` table (K3 upsert per micro-batch).
 
     Unlike the fact tables this sink is a whole-table SCD-0 merge: each
-    batch's files are applied in file-date order against the CURRENT
-    persisted state, so a replayed batch converges to the same table
-    (upsert is idempotent for identical batches)."""
-    from oic_options_chains_spark.pipelines.weeklies import load_weeklies
+    batch's files are parsed by the batch transform
+    (``weeklies_from_lines``) and applied in file-date order against the
+    CURRENT persisted state, so a replayed batch converges to the same
+    table (upsert is idempotent for identical batches)."""
+    from oic_options_chains_spark.pipelines.weeklies import (
+        load_weeklies,
+        weeklies_from_lines,
+    )
     from oic_options_chains_spark.sources.warehouse import (
         overwrite_table,
         read_table,
@@ -223,16 +210,13 @@ def run_incremental_weeklies_load(
 
     def process(batch: DataFrame, _batch_id: int) -> None:
         for day in _distinct_days(batch, "file_date"):
-            rows = batch.filter(F.col("file_date") == F.lit(day)).drop("file_date")
+            lines = batch.filter(F.col("file_date") == F.lit(day))
+            rows = weeklies_from_lines(lines, day)
             if table_exists(table_dir):
                 merged = load_weeklies(read_table(spark, table_dir), rows)
             else:
                 merged = rows
             overwrite_table(spark, table_dir, merged)
-
-    from oic_options_chains_spark.functions.cleaning import enum_map
-    from oic_options_chains_spark.operators.asof import latest_per_key
-    from oic_options_chains_spark.pipelines.weeklies import SYMBOL_ALIASES
 
     lines = (
         spark.readStream.option("pathGlobFilter", "weeklyoptions.*.csv")
@@ -244,22 +228,8 @@ def run_incremental_weeklies_load(
             ).cast("date"),
         )
     )
-    parts = F.split(F.col("value"), ",")
-    parsed = lines.select(
-        enum_map(F.trim(F.get(parts, 0)), SYMBOL_ALIASES).alias("act_symbol"),
-        F.try_to_timestamp(F.trim(F.get(parts, 2))).cast("date").alias(
-            "effective_date"
-        ),
-        F.col("file_date").alias("last_seen"),
-        "file_date",
-    ).filter(F.col("effective_date").isNotNull() & (F.col("act_symbol") != ""))
-
-    def process_with_dedup(batch: DataFrame, batch_id: int) -> None:
-        deduped = latest_per_key(batch, ["act_symbol", "file_date"], "effective_date")
-        process(deduped, batch_id)
-
     (
-        parsed.writeStream.foreachBatch(process_with_dedup)
+        lines.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -1,12 +1,10 @@
 """Adversarial cross-PROCESS lock recovery (VERDICT r8 item 4): two
 real OS processes race ``append_day`` on the same date partition; one
-holder is SIGKILLed mid-append (locks acquired, nothing written, its
-heartbeat thread dead with it). The survivor must steal the stale lease
-and commit, PK uniqueness must hold, and a replay must be a no-op —
-the reference's ON CONFLICT DO NOTHING guarantee (schema.sql:23) under
-a crashed concurrent writer, which in-process thread tests can't prove
-(a thread's heartbeat dies only if mocked; a SIGKILLed process's dies
-for real)."""
+holder is SIGKILLed mid-append (locks acquired, nothing written). The
+kernel drops the dead holder's lock, so the survivor acquires it and
+commits, PK uniqueness must hold, and a replay must be a no-op — the
+reference's ON CONFLICT DO NOTHING guarantee (schema.sql:23) under a
+crashed concurrent writer, which in-process thread tests can't prove."""
 
 from __future__ import annotations
 
@@ -19,7 +17,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Worker A: run the REAL append_day but wedge inside the critical
-# section — locks held, heartbeat beating, no data written — then hang
+# section — locks held, no data written — then hang
 # until SIGKILL. The wedge wraps _partition_locks so everything else is
 # the production path.
 WORKER_A = r"""
@@ -35,7 +33,7 @@ orig = warehouse._partition_locks
 def wedged(*a, **k):
     with orig(*a, **k) as g:
         open(sentinel, "w").close()
-        time.sleep(600)  # killed here: lock held, heartbeat live until SIGKILL
+        time.sleep(600)  # killed here: lock held until SIGKILL
         yield g
 
 warehouse._partition_locks = wedged
@@ -46,26 +44,23 @@ batch = spark.createDataFrame(
 warehouse.append_day(spark, table_dir, batch, pk=["pk", "date"])
 """
 
-# Worker B: real append_day with a short lease so the test doesn't wait
-# out the production 600 s — it must steal A's stale lock and commit.
+# Worker B: the real, unpatched append_day — it must acquire the dead
+# holder's lock and commit.
 WORKER_B = r"""
-import functools, os, sys
+import os, sys
 sys.path.insert(0, {repo!r})
 from oic_options_chains_spark.sources import warehouse
 from oic_options_chains_spark.session import get_spark
 
 table_dir = sys.argv[1]
-warehouse._partition_locks = functools.partial(
-    warehouse._partition_locks, lease_sec=3.0, wait_sec=60.0
-)
 spark = get_spark(app_name="race-b", shuffle_partitions=4)
 batch = spark.createDataFrame(
     [(1, "2024-03-01", "b1"), (2, "2024-03-01", "b2")],
     "pk int, date string, payload string",
 )
-n = warehouse.append_day(spark, table_dir, batch, pk=["pk", "date"], return_count=True)
+n = warehouse.append_day(spark, table_dir, batch, pk=["pk", "date"])
 print(f"B_APPENDED={{n}}", flush=True)
-n2 = warehouse.append_day(spark, table_dir, batch, pk=["pk", "date"], return_count=True)
+n2 = warehouse.append_day(spark, table_dir, batch, pk=["pk", "date"])
 print(f"B_REPLAYED={{n2}}", flush=True)
 """
 
@@ -98,7 +93,7 @@ def test_sigkilled_holder_is_dispossessed_without_duplicate_pks(
             time.sleep(0.2)
         lock = os.path.join(table_dir, "_locks", "2024-03-01.lock")
         assert os.path.exists(lock)
-        os.kill(a.pid, signal.SIGKILL)  # heartbeat dies mid-append
+        os.kill(a.pid, signal.SIGKILL)  # dies mid-append, lock held
         a.wait(timeout=30)
     finally:
         if a.poll() is None:
@@ -107,7 +102,7 @@ def test_sigkilled_holder_is_dispossessed_without_duplicate_pks(
     b = _spawn(WORKER_B, table_dir)
     out, _ = b.communicate(timeout=300)
     assert b.returncode == 0, out
-    assert "B_APPENDED=2" in out, out  # stole the stale lease and committed
+    assert "B_APPENDED=2" in out, out  # took the dead holder's lock and committed
     assert "B_REPLAYED=0" in out, out  # idempotent replay
 
     rows = (
@@ -117,7 +112,7 @@ def test_sigkilled_holder_is_dispossessed_without_duplicate_pks(
         .collect()
     )
     assert sorted((r["pk"], r["count"]) for r in rows) == [(1, 1), (2, 1)]
-    # the dead writer's lock is gone (stolen), the survivor released its own
+    # no lock file is left behind: the survivor released the path
     assert not os.path.exists(
         os.path.join(table_dir, "_locks", "2024-03-01.lock")
     )

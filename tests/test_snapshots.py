@@ -260,17 +260,41 @@ def test_concurrent_append_day_same_partition_keeps_pk_unique(spark, tmp_path):
     keys = sorted(r.k for r in rows)
     assert keys == [1, 2, 3, 4], f"PK uniqueness violated: {keys}"
     # and a replay of either batch is a no-op (idempotency preserved)
-    append_day(spark, tdir, batches["w1"], ["date", "k"])
+    assert append_day(spark, tdir, batches["w1"], ["date", "k"]) == 0
     assert read_table(spark, tdir).count() == 4
     # lock files are released
     locks = os.listdir(os.path.join(tdir, "_locks"))
     assert locks == [], f"leaked locks: {locks}"
 
 
+def test_append_day_cluster_by_survives_partitioned_write(spark, tmp_path):
+    """``cluster_by`` rows reach each file sorted by the cluster key: the
+    partitioned write's own sort by date must not replace it."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from oic_options_chains_spark.sources.warehouse import append_day
+
+    tdir = str(tmp_path / "clustered")
+    df = spark.range(2000).selectExpr(
+        "id AS k",
+        "DATE'2024-01-02' AS date",
+        "concat('S', CAST(id * 7919 % 97 AS STRING)) AS act_symbol",
+    )
+    assert append_day(spark, tdir, df, ["k", "date"], cluster_by=["act_symbol"]) == 2000
+    files = glob.glob(os.path.join(tdir, "date=*", "*.parquet"))
+    assert files
+    for f in files:
+        syms = pq.read_table(f, columns=["act_symbol"]).column(0).to_pylist()
+        assert syms == sorted(syms), f
+
+
 def test_partition_lock_lease_steal(tmp_path):
-    """A lock file left by a crashed writer (older than the lease) is
-    stolen; a fresh lock blocks until released then is acquired."""
-    import time as _t
+    """A lock file left by a crashed writer holds no kernel lock, so it is
+    acquired at once; a lock held by a live holder makes a contender time
+    out until the holder releases it."""
+    import threading
 
     from oic_options_chains_spark.sources.warehouse import _partition_locks
 
@@ -278,22 +302,35 @@ def test_partition_lock_lease_steal(tmp_path):
     lock_path = os.path.join(tdir, "_locks", "2024-01-02.lock")
     os.makedirs(os.path.dirname(lock_path))
     open(lock_path, "w").close()
-    stale = _t.time() - 10_000
-    os.utime(lock_path, (stale, stale))
-    with _partition_locks(tdir, ["2024-01-02"], lease_sec=600, wait_sec=5):
-        assert os.path.exists(lock_path)  # re-created by the stealer
+    with _partition_locks(tdir, ["2024-01-02"], wait_sec=5):
+        assert os.path.exists(lock_path)
     assert not os.path.exists(lock_path)
-    # a FRESH foreign lock makes acquisition time out rather than steal
-    open(lock_path, "w").close()
-    with pytest.raises(TimeoutError):
-        with _partition_locks(tdir, ["2024-01-02"], lease_sec=600, wait_sec=0.3):
-            pass
+    # a LIVE holder makes acquisition time out rather than steal
+    entered = threading.Event()
+    release = threading.Event()
+
+    def holder():
+        with _partition_locks(tdir, ["2024-01-02"], wait_sec=5):
+            entered.set()
+            release.wait(timeout=30)
+
+    t = threading.Thread(target=holder)
+    t.start()
+    try:
+        assert entered.wait(timeout=30)
+        with pytest.raises(TimeoutError):
+            with _partition_locks(tdir, ["2024-01-02"], wait_sec=0.3):
+                pass
+    finally:
+        release.set()
+        t.join()
+    assert not os.path.exists(lock_path)
 
 
-def test_partition_lock_heartbeat_prevents_steal_of_live_holder(tmp_path):
-    """ADVICE r7 (warehouse.py): an append that outlives the lease must
-    NOT lose its lock — the holder's heartbeat refreshes mtime, so a
-    contender sees a live lock and times out instead of stealing."""
+def test_partition_lock_live_holder_is_never_taken(tmp_path):
+    """ADVICE r7 (warehouse.py): an append that outlives a contender's
+    wait must NOT lose its lock — the contender times out instead of
+    taking it, and acquires it once the holder releases."""
     import threading
     import time as _t
 
@@ -302,32 +339,36 @@ def test_partition_lock_heartbeat_prevents_steal_of_live_holder(tmp_path):
     tdir = str(tmp_path / "beat")
     entered = threading.Event()
     release = threading.Event()
+    errors = []
 
     def holder():
-        with _partition_locks(tdir, ["2024-01-02"], lease_sec=0.4, wait_sec=5):
+        with _partition_locks(tdir, ["2024-01-02"], wait_sec=5) as g:
             entered.set()
             release.wait(timeout=30)
+            try:
+                g.verify()  # still the owner after the contender gave up
+            except Exception as e:  # noqa: BLE001
+                errors.append(e)
 
     t = threading.Thread(target=holder)
     t.start()
     assert entered.wait(timeout=30)
-    _t.sleep(1.2)  # three lease periods: without the heartbeat this is stale
+    _t.sleep(1.2)
     with pytest.raises(TimeoutError):
-        with _partition_locks(tdir, ["2024-01-02"], lease_sec=0.4, wait_sec=0.5):
+        with _partition_locks(tdir, ["2024-01-02"], wait_sec=0.5):
             pass
     release.set()
     t.join()
+    assert not errors, errors
     # and after release the lock is acquirable again
-    with _partition_locks(tdir, ["2024-01-02"], lease_sec=0.4, wait_sec=5):
+    with _partition_locks(tdir, ["2024-01-02"], wait_sec=5):
         pass
 
 
 def test_partition_lock_concurrent_stealers_exactly_one_wins(tmp_path):
-    """ADVICE r7 (warehouse.py): rename-based stealing serializes
-    concurrent stealers — with N threads racing a STALE lock, the
-    critical sections never overlap (the old unlink-based steal let a
-    second stealer unlink the first stealer's freshly created live
-    lock and acquire it too)."""
+    """ADVICE r7 (warehouse.py): N threads racing a leftover lock file
+    serialize — the critical sections never overlap, including a waiter
+    that wins the inode its predecessor unlinked on release."""
     import threading
     import time as _t
 
@@ -349,7 +390,7 @@ def test_partition_lock_concurrent_stealers_exactly_one_wins(tmp_path):
     def stealer(i):
         try:
             barrier.wait(timeout=30)
-            with _partition_locks(tdir, ["2024-01-02"], lease_sec=600, wait_sec=30):
+            with _partition_locks(tdir, ["2024-01-02"], wait_sec=30):
                 with guard:
                     if inside:
                         overlaps.append((i, list(inside)))

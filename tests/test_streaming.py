@@ -133,6 +133,7 @@ def test_per_batch_recon_metrics(spark, ohlc, tmp_path):
 
 
 def test_available_now_vol_pages(spark, tmp_path):
+    from oic_options_chains_spark.pipelines.volatility import vol_history
     from oic_options_chains_spark.sources.warehouse import read_table
     from oic_options_chains_spark.streaming.incremental import (
         run_incremental_vol_load,
@@ -159,12 +160,29 @@ def test_available_now_vol_pages(spark, tmp_path):
     run_incremental_vol_load(spark, str(base), table, str(tmp_path / "ckpt_fresh"))
     assert read_table(spark, table).count() == 2
 
+    # each micro-batch ran the batch transform: same rows as vol_history
+    batch = vol_history(spark, str(base), dt.date(2025, 8, 19))
+    streamed = read_table(spark, table).select(*batch.columns)
+    assert sorted(streamed.collect()) == sorted(batch.collect())
+
 
 def test_available_now_weeklies(spark, tmp_path):
+    from oic_options_chains_spark.pipelines.weeklies import (
+        load_weeklies,
+        parse_weeklies_csv,
+    )
     from oic_options_chains_spark.sources.warehouse import read_table
     from oic_options_chains_spark.streaming.incremental import (
         run_incremental_weeklies_load,
     )
+
+    def batch_rows(day):
+        path = str(csv_dir / f"weeklyoptions.{day.isoformat()}.csv")
+        return parse_weeklies_csv(spark, path, day)
+
+    def streamed(expected):
+        got = read_table(spark, table).select(*expected.columns)
+        return sorted(got.collect()) == sorted(expected.collect())
 
     csv_dir = tmp_path / "weeklies"
     csv_dir.mkdir()
@@ -178,6 +196,9 @@ def test_available_now_weeklies(spark, tmp_path):
     state = {r.act_symbol: r for r in read_table(spark, table).collect()}
     assert set(state) == {"AAPL", "BRK.B"}
     assert state["AAPL"].last_seen == dt.date(2025, 8, 18)
+    # the micro-batch ran the batch parse: same rows as parse_weeklies_csv
+    day1 = batch_rows(dt.date(2025, 8, 18))
+    assert streamed(day1)
 
     # next day's file updates AAPL, adds MSFT, keeps BRK.B
     (csv_dir / "weeklyoptions.2025-08-19.csv").write_text(
@@ -189,3 +210,4 @@ def test_available_now_weeklies(spark, tmp_path):
     assert state["AAPL"].effective_date == dt.date(2024, 2, 9)
     assert state["AAPL"].last_seen == dt.date(2025, 8, 19)
     assert state["BRK.B"].last_seen == dt.date(2025, 8, 18)  # untouched
+    assert streamed(load_weeklies(day1, batch_rows(dt.date(2025, 8, 19))))
