@@ -7,9 +7,10 @@ in a driver loop; here ``repartition(date)`` + ``sortWithinPartitions``
 yields the same per-date sorted files from one distributed write — no
 driver loop, any number of dates.
 
-The Dolt versioned-sink step itself (table import/commit/push) is a
-storage-format concern (Delta/Iceberg snapshot commit in a Spark stack)
-and stays outside the engine (K5 infra).
+The Dolt commit of a day's exported tables is
+``sources.snapshots.commit_tables``; a restore reads a table back with
+``read_table_snapshot`` and loads it through
+``restore_option_chain_projection`` and ``append_day``.
 """
 
 from __future__ import annotations
@@ -108,7 +109,9 @@ def write_csv_by_date(df: DataFrame, out_dir: str, sort_cols: list[str]) -> None
         # body (the reference's files carry it as the first column)
         df.withColumn("__pdate", F.col("date"))
         .repartition(F.col("__pdate"))
-        .sortWithinPartitions(*sort_cols)
+        # led by the partition column, this meets the partitioned
+        # write's ordering, so the writer adds no sort of its own
+        .sortWithinPartitions("__pdate", *sort_cols)
         .write.mode("overwrite")
         .partitionBy("__pdate")
         .option("header", True)

@@ -120,22 +120,12 @@ def epoch_dir(src_path: str, tag: str, build: Callable[[str], None]) -> str:
 
 
 def _evict_stale(epoch_root: str, scope: str, ident: str) -> None:
-    """Best-effort eviction, run only when a build just happened (the
-    cache can change only WHEN work happens): a fresh identity under a
-    scope obsoletes the scope's older identities — the source state
-    they fingerprint no longer exists — so prune them down to the
-    single most recent predecessor, plus any pre-round-14 flat-layout
-    entries (16-hex names at the epoch root; the recursive fingerprint
-    changed every identity anyway, so none of them can ever be read
-    again). Keeping exactly ONE predecessor (not zero) is the
-    live-reader guard (round-14 review): a concurrent process may
-    still hold a lazily-evaluated scan over the entry this build just
-    superseded — deleting it would fail that reader mid-query, where
-    the pre-r14 append-only cache would have served it the consistent
-    stale artifact. A reader of an entry superseded TWICE would have
-    had to survive two corpus regenerations; growth stays bounded at 2
-    entries per scope either way. Failures are swallowed: eviction is
-    hygiene and must not fail the build that just succeeded."""
+    """Best-effort eviction, run only after a build: a fresh identity
+    under a scope obsoletes the scope's older identities, so prune them
+    down to the single most recent predecessor. That one is kept because
+    a concurrent reader may still hold a lazy scan over it; growth stays
+    bounded at 2 entries per scope. Failures are swallowed: eviction
+    must not fail the build that just succeeded."""
     scope_dir = os.path.join(epoch_root, scope)
     try:
         siblings = [
@@ -147,16 +137,6 @@ def _evict_stale(epoch_root: str, scope: str, ident: str) -> None:
         siblings = []
     for _, n in sorted(siblings)[:-1]:  # keep the newest predecessor
         shutil.rmtree(os.path.join(scope_dir, n), ignore_errors=True)
-    try:
-        old_layout = [
-            n
-            for n in os.listdir(epoch_root)
-            if len(n) == 16 and all(c in "0123456789abcdef" for c in n)
-        ]
-    except OSError:
-        old_layout = []
-    for n in old_layout:
-        shutil.rmtree(os.path.join(epoch_root, n), ignore_errors=True)
 
 
 def epoch_parquet(

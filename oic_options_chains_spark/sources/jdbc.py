@@ -86,10 +86,6 @@ def get_dialect(name: str) -> JdbcDialect:
     return DIALECTS.get(name, DIALECTS["derby"])
 
 
-# Back-compat alias (pre-r10 callers/tests index this dict directly).
-VARCHAR_MAX = {name: d.varchar_max for name, d in DIALECTS.items()}
-
-
 def jdbc_options(
     url: str,
     table: str,

@@ -29,7 +29,7 @@ from collections.abc import Iterator, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from oic_options_chains_spark.operators.dedup import conflict_ignore_append, dedup_by_key
+from oic_options_chains_spark.operators.dedup import dedup_by_key
 from oic_options_chains_spark.operators.metrics import observed_counts
 
 
@@ -186,13 +186,15 @@ def append_day(
             existing = read_table(spark, table_dir).filter(
                 F.col(date_col).isin(date_vals)
             )
-            batch = conflict_ignore_append(existing, batch, pk)
-        batch, appended = observed_counts(batch)
+            batch = batch.join(existing.select(*pk), on=list(pk), how="left_anti")
         if cluster_by:
             # led by date, this meets the partitioned write's ordering: kept
             batch = batch.repartition(
                 *[F.col(c) for c in cluster_by]
             ).sortWithinPartitions(date_col, *cluster_by)
+        # observed above any exchange: AQE drops a query stage that ran
+        # empty from the final plan, and an observation inside it with it
+        batch, appended = observed_counts(batch)
         guard.verify()
         batch.write.mode("append").partitionBy(date_col).parquet(table_dir)
     return appended.get["rows"]

@@ -120,17 +120,6 @@ def test_regeneration_evicts_twice_superseded_not_predecessor(
     assert os.path.isdir(b1), "other scopes untouched"
 
 
-def test_old_flat_layout_entries_swept_on_build(tmp_path, monkeypatch):
-    cache = tmp_path / "cache"
-    monkeypatch.setenv("SPARK_GRAFT_CACHE_DIR", str(cache))
-    old = cache / "epoch" / ("a" * 16)
-    old.mkdir(parents=True)
-    (old / "stale.parquet").write_bytes(b"x")
-    src = _make_partitioned_src(tmp_path)
-    epoch_dir(src, "t14-sweep", lambda p: os.makedirs(p))
-    assert not old.exists(), "pre-r14 flat-layout entry must be swept"
-
-
 def test_plain_file_source_still_fingerprints(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CACHE_DIR", str(tmp_path / "cache"))
     src = tmp_path / "one.parquet"

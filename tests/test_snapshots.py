@@ -8,9 +8,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from oic_options_chains_spark.sources.snapshots import (
-    commit_snapshot,
+    commit_tables,
     list_snapshots,
-    read_snapshot,
+    read_table_snapshot,
+    read_table_version,
 )
 
 
@@ -24,31 +25,31 @@ def _df(spark, rows):
 
 
 def test_commit_list_read_latest(spark, snap_dir):
-    commit_snapshot(_df(spark, [("A", 1.0)]), snap_dir, "2024-01-02", "daily")
-    commit_snapshot(_df(spark, [("A", 2.0), ("B", 3.0)]), snap_dir, "2024-01-03")
+    commit_tables({"t": _df(spark, [("A", 1.0)])}, snap_dir, "2024-01-02", "daily")
+    commit_tables({"t": _df(spark, [("A", 2.0), ("B", 3.0)])}, snap_dir, "2024-01-03")
     log = list_snapshots(snap_dir)
     assert [e["snapshot_id"] for e in log] == ["2024-01-02", "2024-01-03"]
     assert [e["rows"] for e in log] == [1, 2]
-    latest = read_snapshot(spark, snap_dir)
+    latest = read_table_snapshot(spark, snap_dir, "t")
     assert latest.count() == 2
-    old = read_snapshot(spark, snap_dir, "2024-01-02")
+    old = read_table_snapshot(spark, snap_dir, "t", "2024-01-02")
     assert [r.px for r in old.collect()] == [1.0]
 
 
 def test_recommit_same_day_is_replay_not_duplicate(spark, snap_dir):
-    commit_snapshot(_df(spark, [("A", 1.0)]), snap_dir, "2024-01-02")
-    commit_snapshot(_df(spark, [("A", 9.0)]), snap_dir, "2024-01-02")
+    commit_tables({"t": _df(spark, [("A", 1.0)])}, snap_dir, "2024-01-02")
+    commit_tables({"t": _df(spark, [("A", 9.0)])}, snap_dir, "2024-01-02")
     log = list_snapshots(snap_dir)
     assert len(log) == 1 and log[0]["rows"] == 1
-    assert [r.px for r in read_snapshot(spark, snap_dir).collect()] == [9.0]
+    assert [r.px for r in read_table_snapshot(spark, snap_dir, "t").collect()] == [9.0]
 
 
 def test_unknown_snapshot_raises(spark, snap_dir):
-    commit_snapshot(_df(spark, [("A", 1.0)]), snap_dir, "2024-01-02")
-    with pytest.raises(FileNotFoundError, match="not in manifest"):
-        read_snapshot(spark, snap_dir, "2023-12-31")
+    commit_tables({"t": _df(spark, [("A", 1.0)])}, snap_dir, "2024-01-02")
+    with pytest.raises(FileNotFoundError, match="not in log"):
+        read_table_snapshot(spark, snap_dir, "t", "2023-12-31")
     with pytest.raises(FileNotFoundError, match="no snapshots"):
-        read_snapshot(spark, snap_dir + "_missing")
+        read_table_snapshot(spark, snap_dir + "_missing", "t")
 
 
 def test_snapshot_roundtrip_from_export_projection(spark, sf_dir, snap_dir):
@@ -56,9 +57,9 @@ def test_snapshot_roundtrip_from_export_projection(spark, sf_dir, snap_dir):
     from oic_options_chains_spark.queries import QUERIES
 
     df = QUERIES["q_export_projection"](spark, sf_dir)
-    entry = commit_snapshot(df, snap_dir, "2024-01-05", "export")
-    back = read_snapshot(spark, snap_dir, "2024-01-05")
-    assert back.count() == entry["rows"] == df.count()
+    entry = commit_tables({"t": df}, snap_dir, "2024-01-05", "export")
+    back = read_table_snapshot(spark, snap_dir, "t", "2024-01-05")
+    assert back.count() == entry["rows"] == entry["tables"]["t"]["rows"] == df.count()
     assert sorted(back.columns) == sorted(df.columns)
 
 
@@ -86,13 +87,9 @@ def test_schema_evolution_across_days(spark, tmp_path):
 
 def test_snapshot_diff_between_committed_versions(spark, tmp_path):
     # The release workflow end-to-end: commit v1, commit v2, read both
-    # back through the manifest, and classify every key with the CDC
+    # back through the log, and classify every key with the CDC
     # diff — the Dolt "what changed between these two commits" question.
     from oic_options_chains_spark.operators.cdc import snapshot_diff
-    from oic_options_chains_spark.sources.snapshots import (
-        commit_snapshot,
-        read_snapshot,
-    )
 
     snap = str(tmp_path / "snaps")
     v1 = spark.createDataFrame(
@@ -101,13 +98,13 @@ def test_snapshot_diff_between_committed_versions(spark, tmp_path):
     v2 = spark.createDataFrame(
         [(2, "beta"), (3, "GAMMA"), (4, "delta")], "k bigint, payload string"
     )
-    commit_snapshot(v1, snap, "2024-01-01")
-    commit_snapshot(v2, snap, "2024-01-02")
+    commit_tables({"t": v1}, snap, "2024-01-01")
+    commit_tables({"t": v2}, snap, "2024-01-02")
 
-    old = read_snapshot(spark, snap, "2024-01-01").select(
+    old = read_table_snapshot(spark, snap, "t", "2024-01-01").select(
         "k", F.md5("payload").alias("fp")
     )
-    new = read_snapshot(spark, snap, "2024-01-02").select(
+    new = read_table_snapshot(spark, snap, "t", "2024-01-02").select(
         "k", F.md5("payload").alias("fp")
     )
     got = {r["k"]: r["status"] for r in snapshot_diff(old, new, "k").collect()}
@@ -133,7 +130,7 @@ def test_concurrent_commits_never_lose_entries(spark, tmp_path):
     def committer(day):
         try:
             barrier.wait(timeout=30)
-            commit_snapshot(df_by_day[day], snap, day, message=f"c{day}")
+            commit_tables({"t": df_by_day[day]}, snap, day, message=f"c{day}")
         except Exception as e:  # noqa: BLE001
             errors.append(e)
 
@@ -185,38 +182,6 @@ def test_occ_log_append_is_race_free_without_spark(tmp_path):
     assert sorted(got) == list(range(16)), "versions must be dense and unique"
     assert _log_versions(snap) == list(range(16))
     assert [e["rows"] for e in _read_log(snap)] == list(range(16))
-
-
-def test_legacy_manifest_dirs_still_readable(spark, tmp_path):
-    """A snapshot dir written before the OCC log existed (manifest only)
-    must keep reading; the first new commit migrates it into the log."""
-    import json
-
-    snap = str(tmp_path / "legacy")
-    os.makedirs(snap)
-    legacy = [
-        {
-            "snapshot_id": "2023-12-31",
-            "message": "old",
-            "rows": 1,
-            "committed_at": "2023-12-31T00:00:00+00:00",
-        }
-    ]
-    with open(os.path.join(snap, "_MANIFEST.json"), "w") as f:
-        json.dump(legacy, f)
-    os.makedirs(os.path.join(snap, "snapshot_id=2023-12-31"), exist_ok=True)
-    spark.createDataFrame([("x", 1)], "a string, v int").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(snap, "snapshot_id=2023-12-31"))
-    assert [e["snapshot_id"] for e in list_snapshots(snap)] == ["2023-12-31"]
-    assert read_snapshot(spark, snap).count() == 1
-    # first OCC commit migrates the legacy manifest into the log — the
-    # old entry must survive alongside the new one
-    commit_snapshot(
-        spark.createDataFrame([("y", 2)], "a string, v int"), snap, "2024-01-01"
-    )
-    ids = [e["snapshot_id"] for e in list_snapshots(snap)]
-    assert ids == ["2023-12-31", "2024-01-01"]
 
 
 def test_concurrent_append_day_same_partition_keeps_pk_unique(spark, tmp_path):
@@ -288,6 +253,19 @@ def test_append_day_cluster_by_survives_partitioned_write(spark, tmp_path):
     for f in files:
         syms = pq.read_table(f, columns=["act_symbol"]).column(0).to_pylist()
         assert syms == sorted(syms), f
+
+
+def test_append_day_cluster_by_counts_empty_writes(spark, tmp_path):
+    """An append that writes no rows returns 0 with ``cluster_by`` too:
+    an empty batch into a new table, and a replay into a filled one."""
+    from oic_options_chains_spark.sources.warehouse import append_day
+
+    df = spark.range(50).selectExpr("id AS k", "DATE'2024-01-02' AS date", "id % 7 AS s")
+    empty = str(tmp_path / "empty")
+    assert append_day(spark, empty, df.limit(0), ["k", "date"], cluster_by=["s"]) == 0
+    tdir = str(tmp_path / "filled")
+    assert append_day(spark, tdir, df, ["k", "date"], cluster_by=["s"]) == 50
+    assert append_day(spark, tdir, df, ["k", "date"], cluster_by=["s"]) == 0
 
 
 def test_partition_lock_lease_steal(tmp_path):
@@ -411,48 +389,25 @@ def test_partition_lock_concurrent_stealers_exactly_one_wins(tmp_path):
     assert not os.path.exists(lock_path)
 
 
-def test_version_addressed_read_and_revert(spark, tmp_path):
-    """Time travel by commit version + append-only revert: after a
-    replayed (changed) day, version-addressed reads still see each
-    commit's own content... and revert_snapshot restores the old rows
-    as a NEW commit without rewriting history."""
-    from oic_options_chains_spark.sources.snapshots import (
-        read_snapshot_version,
-        revert_snapshot,
-    )
-
+def test_version_addressed_read(spark, tmp_path):
+    """Time travel by commit version: after a replayed (changed) day,
+    version-addressed reads still see each commit's own content."""
     snap = str(tmp_path / "tt")
     v1 = spark.createDataFrame([("a", 1)], "k string, v int")
     v2 = spark.createDataFrame([("a", 2), ("b", 3)], "k string, v int")
-    e0 = commit_snapshot(v1, snap, "2024-01-02", message="first")
+    e0 = commit_tables({"t": v1}, snap, "2024-01-02", message="first")
     assert e0["rows"] == 1
-    commit_snapshot(v2, snap, "2024-01-02", message="replayed")
+    commit_tables({"t": v2}, snap, "2024-01-02", message="replayed")
 
     # current read = the replay
-    assert read_snapshot(spark, snap).count() == 2
+    assert read_table_snapshot(spark, snap, "t").count() == 2
     assert list_snapshots(snap)[0]["rows"] == 2
     # commits are immutable version dirs: the replayed day's OLD rows
     # are still readable at their own version — real time travel
-    assert read_snapshot_version(spark, snap, 0).count() == 1
-    assert read_snapshot_version(spark, snap, 1).count() == 2
+    assert read_table_version(spark, snap, "t", 0).count() == 1
+    assert read_table_version(spark, snap, "t", 1).count() == 2
     with pytest.raises(FileNotFoundError):
-        read_snapshot_version(spark, snap, 99)
-
-    # commit a second day, then revert it: history grows, content rolls back
-    commit_snapshot(
-        spark.createDataFrame([("x", 9)], "k string, v int"), snap, "2024-01-03"
-    )
-    revert_snapshot(spark, snap, "2024-01-02")
-    ids = [e["snapshot_id"] for e in list_snapshots(snap)]
-    assert ids == ["2024-01-02", "2024-01-03"]  # fold-by-id, both live
-    # the revert appended a new log version rather than rewriting any
-    from oic_options_chains_spark.sources.snapshots import _log_versions
-
-    assert len(_log_versions(snap)) == 4  # 2 commits + day2 + revert
-    # every historical version remains independently readable
-    assert [
-        read_snapshot_version(spark, snap, v).count() for v in range(4)
-    ] == [1, 2, 1, 2]
+        read_table_version(spark, snap, "t", 99)
 
 
 class TestMultiTableCommits:
@@ -487,7 +442,7 @@ class TestMultiTableCommits:
 
         class Boom:
             @property
-            def write(self):
+            def observe(self):
                 raise RuntimeError("staging failed")
 
         # sorted order stages 'a_good' first, then fails on 'b_boom':

@@ -140,6 +140,82 @@ def test_restore_roundtrip(spark, chain_table, tmp_path):
     assert read_table(spark, table).count() == 3
 
 
+def test_csv_export_files_sorted_by_sort_cols(spark, tmp_path):
+    """Every per-date file comes out sorted by ``sort_cols``, also from a
+    shuffled multi-partition frame: the partitioned write's own sort by
+    date must not replace the caller's sort."""
+    import csv
+    import random
+
+    from oic_options_chains_spark.pipelines.export import write_csv_by_date
+
+    rows = [
+        (d, f"S{i % 7:02d}", i)
+        for d in ("2025-08-18", "2025-08-19")
+        for i in range(60)
+    ]
+    random.Random(7).shuffle(rows)
+    df = spark.createDataFrame(rows, "date string, act_symbol string, k int").repartition(6)
+    out = str(tmp_path / "sorted_export")
+    write_csv_by_date(df, out, ["act_symbol", "k"])
+    files = glob.glob(f"{out}/__pdate=*/*.csv")
+    assert {f.split("__pdate=")[1][:10] for f in files} == {"2025-08-18", "2025-08-19"}
+    for f in files:
+        with open(f) as fh:
+            keys = [(r["act_symbol"], int(r["k"])) for r in csv.DictReader(fh)]
+        assert keys and keys == sorted(keys), f
+
+
+def test_commit_restore_roundtrip(spark, chain_table, tmp_path):
+    """The dump-dolt -> restore-from-dolt cycle: a day's tables committed
+    in one snapshot, the chain read back through the restore projection
+    into a fresh table equals the committed rows, and restoring into the
+    original table appends nothing."""
+    from pyspark.sql import functions as F
+
+    from oic_options_chains_spark.pipelines.export import (
+        restore_option_chain_projection,
+    )
+    from oic_options_chains_spark.schemas import (
+        OPTION_CHAIN_PK,
+        VOLATILITY_HISTORY,
+        VOLATILITY_HISTORY_PK,
+    )
+    from oic_options_chains_spark.sources.snapshots import (
+        commit_tables,
+        read_table_snapshot,
+    )
+    from oic_options_chains_spark.sources.warehouse import append_day, read_table
+
+    day = dt.date(2025, 8, 18)
+    oc, vh = str(tmp_path / "option_chain"), str(tmp_path / "volatility_history")
+    append_day(spark, oc, chain_table.filter(F.col("date") == day), OPTION_CHAIN_PK)
+    vol_row = ("AAA", day, Decimal("0.2100")) + (None,) * (len(VOLATILITY_HISTORY) - 3)
+    append_day(spark, vh, spark.createDataFrame([vol_row], VOLATILITY_HISTORY),
+               VOLATILITY_HISTORY_PK)
+    day_oc = read_table(spark, oc).filter(F.col("date") == day)
+    day_vh = read_table(spark, vh).filter(F.col("date") == day)
+    snaps = str(tmp_path / "snapshots")
+    entry = commit_tables(
+        {"option_chain": day_oc, "volatility_history": day_vh}, snaps, day.isoformat()
+    )
+    assert entry["tables"]["option_chain"]["rows"] == 2
+    assert entry["tables"]["volatility_history"]["rows"] == 1
+
+    cols = OPTION_CHAIN.names
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    back = read_table_snapshot(spark, snaps, "option_chain", day.isoformat())
+    fresh = str(tmp_path / "restored")
+    assert append_day(spark, fresh, restore_option_chain_projection(back),
+                      OPTION_CHAIN_PK) == 2
+    assert rows(read_table(spark, fresh)) == rows(back) == rows(day_oc)
+    assert append_day(spark, oc, restore_option_chain_projection(back),
+                      OPTION_CHAIN_PK) == 0
+
+
 def test_weekly_table_persistence_roundtrip(spark, weekly_batch, tmp_path):
     from oic_options_chains_spark.pipelines.weeklies import load_weeklies
     from oic_options_chains_spark.sources.warehouse import (
