@@ -48,7 +48,6 @@ def asof_join(
     how: str = "left",
     direction: str = "backward",
     tolerance_days: int | None = None,
-    strategy: str = "pairs",
 ) -> DataFrame:
     """As-of join: for each left row, attach the nearest right row in the
     chosen ``direction`` within the same key group — the full
@@ -63,35 +62,15 @@ def asof_join(
       this is also the pruning lever: a bounded lookback turns "all
       history" into N date partitions on the scan.
 
-    ``strategy='pairs'`` (default): equi-join on keys with the range
-    predicate, then keep the top-1 right row per left row via a window.
-    For a small left side (the reference's case: one (symbol, date)
-    pair per file) Catalyst broadcasts it and the range filter prunes
-    before the window — but a key hot on BOTH sides pays
-    n_left(k) * n_right(k) candidates before the window cuts them.
-
-    ``strategy='merge'`` (backward, unbounded, unique left rows only):
-    delegates to :func:`asof_join_union` — union + per-key sort +
-    carry-forward, linear per key at any skew. Same results, with
-    three documented edge differences: no forward/tolerance support,
-    exact duplicate left ROWS are not collapsed the way the pairs
-    window (partitioned by every left column) collapses them, and a
-    right attribute sharing a LEFT column's name raises ValueError
-    (e.g. left_time == right_time — the pairs form silently emits two
-    ambiguous same-named output columns there; rename one side).
+    Plan: equi-join on keys with the range predicate, then keep the
+    top-1 right row per left row via a window. For a small left side
+    (the reference's case: one (symbol, date) pair per file) Catalyst
+    broadcasts it and the range filter prunes before the window — but
+    a key hot on BOTH sides pays n_left(k) * n_right(k) candidates
+    before the window cuts them; :func:`asof_join_union` is the
+    backward, unbounded form that stays linear per key at any skew.
     """
     assert direction in ("backward", "forward")
-    assert strategy in ("pairs", "merge")
-    if strategy == "merge":
-        assert direction == "backward" and tolerance_days is None, (
-            "merge strategy supports backward/unbounded only"
-        )
-        r2 = right.filter(F.col(right_time).isNotNull()).withColumn(
-            "__rt", F.col(right_time)
-        )
-        return asof_join_union(
-            left, r2, on, left_time, "__rt", tiebreak=tiebreak, how=how
-        )
     lt = F.col(f"__l.{left_time}")
     rt = F.col(f"__r.{right_time}")
     if direction == "backward":

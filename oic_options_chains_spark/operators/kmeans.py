@@ -263,10 +263,14 @@ def kmeans_fit(
     return assigned, centroids
 
 
-def ivf_probe_cells(centroids: DataFrame, qrow: DataFrame, n_probe: int) -> DataFrame:
-    """The ``n_probe`` coarse cells nearest the query, as a (cid)
-    relation — shared by IVF-flat (``ivf_kmeans_topk``) and IVF-PQ
-    (operators/pq.ivf_pq_topk). ``qrow`` is one row (q_qarr).
+def ivf_probe_cells_batch(
+    centroids: DataFrame, queries: DataFrame, n_probe: int
+) -> DataFrame:
+    """The ``n_probe`` coarse cells nearest each query — shared by
+    IVF-flat (``ivf_kmeans_topk``) and IVF-PQ
+    (``operators/pq.ivf_pq_topk_batch``). ``queries`` is (qid, q_qarr);
+    returns (qid, cid) with exactly ``n_probe`` rows per qid. A single
+    query is a one-row relation.
 
     Ranking is EXACT-INTEGER, not double: the cell distance is the
     rational N/n^2 with N = a*n^2 - 2*b*n + ss (all integer moments),
@@ -276,62 +280,12 @@ def ivf_probe_cells(centroids: DataFrame, qrow: DataFrame, n_probe: int) -> Data
     last-ulp difference. KEEP IN SYNC with the nq/probe CTEs in
     queries/clustering.py (DuckDB side uses HUGEINT).
 
-    Rank-by-count-ahead over the k cells collapsed into ONE row: cell c
-    probes iff fewer than n_probe cells rank strictly ahead of it. The
-    nested array filter is k^2 comparisons on k<=tens of cells — one
-    projection, no join or aggregation exchange."""
-    a_q = _fold_sum_long(F.zip_with("q_qarr", "q_qarr", lambda x, y: x * y))
-    scored_cells = centroids.crossJoin(F.broadcast(qrow.withColumn("qa", a_q)))
-    b = _fold_sum_long(F.zip_with(F.col("q_qarr"), F.col("sarr"), lambda x, y: x * y))
-    ncell = scored_cells.select(
-        "cid",
-        (
-            _dec(F.col("qa")) * _dec(F.col("n")) * _dec(F.col("n"))
-            - _dec(F.lit(2)) * _dec(b) * _dec(F.col("n"))
-            + _dec(F.col("ss"))
-        ).alias("num"),
-        (_dec(F.col("n")) * _dec(F.col("n"))).alias("nn"),
-    )
-
-    def _ahead(o: Column, c: Column) -> Column:
-        return (o["num"] * c["nn"] < c["num"] * o["nn"]) | (
-            (o["num"] * c["nn"] == c["num"] * o["nn"]) & (o["cid"] < c["cid"])
-        )
-
-    packed_cells = ncell.agg(
-        F.collect_list(F.struct("cid", "num", "nn")).alias("cells")
-    )
-    return packed_cells.select(
-        F.explode(
-            F.filter(
-                "cells",
-                lambda c: F.size(
-                    F.filter("cells", lambda o: _ahead(o, c))
-                ) < n_probe,
-            )
-        ).alias("cell")
-    ).select(F.col("cell.cid").alias("cid"))
-
-
-def ivf_probe_cells_batch(
-    centroids: DataFrame, queries: DataFrame, n_probe: int
-) -> DataFrame:
-    """Per-query probe cells for a RELATION of queries — the serving
-    twin of :func:`ivf_probe_cells`. ``queries`` is (qid, q_qarr);
-    returns (qid, cid) with exactly ``n_probe`` rows per qid.
-
-    Identical exact-integer count-ahead ranking (decimal(38,0)
-    cross-multiplication, cid tie-break), grouped per qid instead of
-    collapsed to one global row: the k cells score against every query
-    in ONE broadcast cross product (k x q rows — both tiny), then the
-    per-qid collect_list + nested filter picks each query's cells with
-    no join back to the corpus. KEEP IN SYNC with the single-query form
-    above and the qids-keyed probe CTE in queries/clustering.py — the
-    sync is ENFORCED, not just asked for: tests/test_round12_batch.py
-    pins batch == single bit-for-bit per qid, so a tweak to one copy
-    fails the suite until mirrored. (The single form stays separate on
-    purpose: its global orderBy+limit plan is cheaper than the per-qid
-    window this form needs.)"""
+    The k cells score against every query in ONE broadcast cross
+    product (k x q rows — both tiny); each qid's cells then collapse
+    into one row, and cell c probes iff fewer than n_probe cells rank
+    strictly ahead of it (cid tie-break). The nested array filter is
+    k^2 comparisons on k<=tens of cells, with no join back to the
+    corpus."""
     a_q = _fold_sum_long(F.zip_with("q_qarr", "q_qarr", lambda x, y: x * y))
     scored_cells = centroids.crossJoin(
         F.broadcast(queries.withColumn("qa", a_q))
@@ -397,9 +351,9 @@ def ivf_kmeans_topk(
     qrow = (
         quantize(embeddings, id_col, vec_col)
         .filter(F.col("vec_id") == query_id)
-        .select(F.col("qarr").alias("q_qarr"))
+        .select(F.lit(query_id).alias("qid"), F.col("qarr").alias("q_qarr"))
     )
-    probe = ivf_probe_cells(centroids, qrow, n_probe)
+    probe = ivf_probe_cells_batch(centroids, qrow, n_probe)
 
     cand = (
         assigned.join(F.broadcast(probe), "cid", "semi")

@@ -363,7 +363,7 @@ def _pq_fit_qv(
     vectorized_assign: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     # iters=0 would fall through the update loop with coded=None and
-    # crash downstream callers (ivf_pq_topk) far from the cause
+    # crash downstream callers (ivf_pq_topk_batch) far from the cause
     if iters < 1:
         raise ValueError(f"pq_fit requires iters >= 1, got {iters}")
     seeds = qv.orderBy("vec_id").limit(k_sub)
@@ -454,32 +454,6 @@ def _fit_both(
         return f_coarse.result(), f_pq.result()
 
 
-def adc_table(
-    codebooks: DataFrame, query_qv: DataFrame, sub_dim: int = 8
-) -> DataFrame:
-    """(sub, cid, sd): the query's scaled integer distance
-    floor(num * 2^20 / n^2) to every sub-centroid — the ADC lookup
-    table, n_sub * k_sub rows, built once and broadcast. ``query_qv``
-    is a one-row (q_qarr) relation. The subspace count is NOT a
-    parameter: it comes from the codebooks' own ``sub`` column, so a
-    served (index=) path cannot desync from the artifact's training
-    (ADVICE r13 — the old ignored n_sub argument upheld that contract
-    only by being dead)."""
-    with_q = codebooks.crossJoin(F.broadcast(query_qv))
-    sq = _subvector(F.col("q_qarr"), F.col("sub"), sub_dim)
-    a = _fold_sum_long(F.zip_with(sq, sq, lambda x, y: x * y))
-    cell = F.struct("cid", "sarr", "n", "ss")
-    scored = with_q.select(
-        "sub",
-        "cid",
-        _cell_num(sq, a, cell).alias("num"),
-        (_dec(F.col("n")) * _dec(F.col("n"))).alias("nn"),
-    )
-    return scored.selectExpr(
-        "sub", "cid", f"CAST(num * {ADC_SHIFT} div nn AS BIGINT) AS sd"
-    )
-
-
 class IvfPqIndex(NamedTuple):
     """The four relations of a trained IVF-PQ index — everything
     retrieval needs besides the raw vectors (which only the bounded
@@ -535,7 +509,7 @@ def ivf_pq_fit_index(
     verbatim to ANN: at 100 TB the index is trained once and queried
     millions of times, so the fit must not ride along on every query —
     :func:`materialize_ivf_pq_index` persists this result and
-    :func:`ivf_pq_topk` consumes it via ``index=``. Both fits are
+    :func:`ivf_pq_topk_batch` consumes it via ``index=``. Both fits are
     deterministic (lowest-id seeding, integer Lloyd updates), so served
     answers are bit-for-bit the inline fit's — the same property that
     lets the DuckDB oracles replay the training recursion."""
@@ -590,129 +564,16 @@ def read_ivf_pq_index(spark: SparkSession, path: str) -> IvfPqIndex:
     return idx
 
 
-def ivf_pq_topk(
-    embeddings: DataFrame,
-    query_id: int,
-    coarse_k: int = 8,
-    n_probe: int = 2,
-    n_sub: int = 8,
-    k_sub: int = 16,
-    iters: int = 2,
-    topk: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rerank: int | None = 50,
-    index: IvfPqIndex | None = None,
-) -> DataFrame:
-    """IVF-ADC retrieval: coarse-quantize the corpus (k-means,
-    ``coarse_k`` cells), PQ-encode it, then answer the query by scanning
-    only the ``n_probe`` nearest coarse cells and scoring their members
-    as the sum of n_sub ADC table lookups — (vec_id, score, rank).
-
-    ``index=`` (round 13) is the SERVING path: pass a trained
-    :class:`IvfPqIndex` (:func:`ivf_pq_fit_index` /
-    :func:`read_ivf_pq_index`) and the call skips both fits — per-query
-    work is the coarse probe against ~coarse_k centroid rows, the
-    128-row ADC table, the code scan of the probed cells, and the
-    R-row exact re-rank. ALL fit parameters —
-    ``coarse_k``/``n_sub``/``k_sub``/``iters`` — are IGNORED with
-    ``index=`` (the index's own training pinned them; the ADC table
-    derives its (sub, cid) keys from the index's codebooks relation
-    itself, and candidate scoring explodes the index's codes, so
-    subspace structure travels entirely WITH the artifact — only the
-    module-default sub_dim=8 slicing of the query vector must match
-    how the index was trained). Fits are deterministic, so served rows
-    are bit-for-bit the inline form's.
-
-    The coarse probe reuses the exact cross-multiplied ranking of
-    ``ivf_kmeans_topk`` (operators/kmeans.py:190); the in-cell ranking
-    differs: candidates are never read, only their 8 codes, which is
-    what makes the scan side byte-cheap at 100 TB. ADC scores are
-    scaled-integer by construction, so top-k and rank are hash-exact.
-
-    ``rerank=R`` (DEFAULT: 50 — the production path since round 12;
-    pass ``rerank=None`` for the diagnostic ADC-only form the
-    q_ann_ivf_pq oracle pins) adds the production accuracy stage (ADC
-    shortlist + exact re-rank): the ADC pass keeps its byte-cheap scan
-    but returns
-    a top-R shortlist instead of the final answer; only those R rows'
-    real vectors are read and ranked by the exact quantized integer L2
-    (the same distance the recall ground truth uses), ties to the
-    lowest id. PQ quantization error then can only cost recall when a
-    true neighbor misses the ENTIRE shortlist (or its coarse cell was
-    not probed) — the measured decay of the pinned 16-codeword codebook
-    (recall_bp 7333 -> 2666 as sf0.5 -> 2) is quantization misranking
-    inside probed cells, exactly what the R-deep shortlist absorbs. At
-    100 TB the re-rank reads R full vectors per query, microscopic next
-    to the scan the ADC stage avoids; `rank`/`score` stay hash-exact
-    integers (score = exact L2 in the re-ranked form)."""
-    from oic_options_chains_spark.operators.kmeans import ivf_probe_cells
-
-    qv = quantize(embeddings, id_col, vec_col)
-    if index is not None:
-        _check_index(index)
-        assigned, centroids = index.assigned, index.centroids
-        coded, codebooks = index.codes, index.codebooks
-    else:
-        (assigned, centroids), (coded, codebooks) = _fit_both(
-            embeddings, qv, coarse_k, n_sub, k_sub, iters, id_col, vec_col
-        )
-    qrow = (
-        qv.filter(F.col("vec_id") == query_id)
-        .select(F.col("qarr").alias("q_qarr"))
-    )
-    probe = ivf_probe_cells(centroids, qrow, n_probe)
-    adc = adc_table(codebooks, qrow)
-
-    cand = (
-        assigned.join(F.broadcast(probe), "cid", "semi")
-        .filter(F.col("vec_id") != query_id)
-        .select("vec_id")
-        .join(coded.select("vec_id", "codes"), "vec_id")
-    )
-    cand_long = cand.select("vec_id", F.posexplode("codes").alias("sub", "cid"))
-    scored = cand_long.join(F.broadcast(adc), ["sub", "cid"]).groupBy(
-        "vec_id"
-    ).agg(F.sum("sd").cast("bigint").alias("score"))
-    if rerank is not None:
-        shortlist = scored.orderBy("score", "vec_id").limit(max(rerank, topk))
-        exact = (
-            shortlist.select("vec_id")
-            .join(qv, "vec_id")
-            .crossJoin(F.broadcast(qrow))
-            .select(
-                "vec_id",
-                F.aggregate(
-                    F.zip_with(
-                        F.col("qarr"),
-                        F.col("q_qarr"),
-                        lambda x, y: (x - y) * (x - y),
-                    ),
-                    F.lit(0).cast("bigint"),
-                    lambda acc, x: acc + x,
-                ).alias("score"),
-            )
-        )
-        top = exact.orderBy("score", "vec_id").limit(topk)
-        return top.withColumn(
-            "rank",
-            F.row_number().over(Window.orderBy("score", "vec_id")).cast("int"),
-        )
-    top = scored.orderBy("score", "vec_id").limit(topk)
-    return top.withColumn(
-        "rank", F.row_number().over(Window.orderBy("score", "vec_id")).cast("int")
-    )
-
-
 def adc_table_batch(
     codebooks: DataFrame, queries: DataFrame, sub_dim: int = 8
 ) -> DataFrame:
-    """(qid, sub, cid, sd): the ADC lookup tables of a RELATION of
-    queries — q x n_sub x k_sub rows, one broadcast cross product of
-    two tiny relations. Same scaled-integer entries as
-    :func:`adc_table` (floor(num * 2^20 / n^2), decimal(38,0) div),
-    and same no-n_sub-parameter contract: subspace structure comes
-    from the codebooks relation itself."""
+    """(qid, sub, cid, sd): each query's scaled integer distance
+    floor(num * 2^20 / n^2) to every sub-centroid — the ADC lookup
+    tables, q x n_sub x k_sub rows, one broadcast cross product of two
+    tiny relations (decimal(38,0) ``div``). ``queries`` is (qid,
+    q_qarr). The subspace count is NOT a parameter: it comes from the
+    codebooks' own ``sub`` column, so a served (index=) path cannot
+    desync from the artifact's training."""
     with_q = codebooks.crossJoin(F.broadcast(queries))
     sq = _subvector(F.col("q_qarr"), F.col("sub"), sub_dim)
     a = _fold_sum_long(F.zip_with(sq, sq, lambda x, y: x * y))
@@ -743,17 +604,40 @@ def ivf_pq_topk_batch(
     rerank: int | None = 50,
     index: IvfPqIndex | None = None,
 ) -> DataFrame:
-    """IVF-ADC retrieval for a SET of queries against ONE fit — the
-    serving shape :func:`ivf_pq_topk` (one query per fit) cannot
-    express. Returns (qid, vec_id, score, rank), ``topk`` rows per qid.
+    """IVF-ADC retrieval for a SET of queries against ONE fit:
+    coarse-quantize the corpus (k-means, ``coarse_k`` cells), PQ-encode
+    it, then answer each query by scanning only its ``n_probe`` nearest
+    coarse cells and scoring their members as the sum of n_sub ADC table
+    lookups. Returns (qid, vec_id, score, rank), ``topk`` rows per qid;
+    one query is ``query_ids=[qid]``.
 
-    ``index=`` (round 13) composes the two halves of the serving story:
-    a MATERIALIZED epoch index (:func:`ivf_pq_fit_index` /
-    :func:`read_ivf_pq_index`) answering a BATCH of queries — zero
-    training at query time, one corpus code scan for the whole batch.
-    ALL fit parameters (``coarse_k``/``n_sub``/``k_sub``/``iters``)
-    are ignored with ``index=`` — subspace structure travels with the
-    artifact (see :func:`ivf_pq_topk`).
+    ``index=`` is the SERVING path: pass a trained :class:`IvfPqIndex`
+    (:func:`ivf_pq_fit_index` / :func:`read_ivf_pq_index`) and the call
+    skips both fits — per-query work is the coarse probe against
+    ~coarse_k centroid rows, the n_sub x k_sub ADC table, the code scan
+    of the probed cells, and the R-row exact re-rank. ALL fit parameters
+    — ``coarse_k``/``n_sub``/``k_sub``/``iters`` — are IGNORED with
+    ``index=`` (the index's own training pinned them; the ADC tables
+    derive their (sub, cid) keys from the index's codebooks relation
+    itself, and candidate scoring explodes the index's codes, so
+    subspace structure travels entirely WITH the artifact — only the
+    module-default sub_dim=8 slicing of the query vectors must match how
+    the index was trained). Fits are deterministic, so served rows are
+    bit-for-bit the inline form's.
+
+    ``rerank=R`` (default 50; pass ``rerank=None`` for the diagnostic
+    ADC-only form the q_ann_ivf_pq oracle pins) adds the accuracy stage:
+    the ADC pass keeps its byte-cheap scan but returns a top-R shortlist
+    per qid; only those rows' real vectors are read and ranked by the
+    exact quantized integer L2 (the same distance the recall ground
+    truth uses), ties to the lowest id. PQ quantization error then can
+    only cost recall when a true neighbor misses the ENTIRE shortlist
+    (or its coarse cell was not probed) — the measured decay of the
+    pinned 16-codeword codebook (recall_bp 7333 -> 2666 as sf0.5 -> 2)
+    is quantization misranking inside probed cells, exactly what the
+    R-deep shortlist absorbs. ``score`` is the ADC sum without re-rank
+    and the exact L2 with it; both are integers, so top-k and rank are
+    hash-exact.
 
     At 100 TB the index is trained once and queried millions of times;
     per-query cost must be independent of the fit. Here the coarse
@@ -761,26 +645,25 @@ def ivf_pq_topk_batch(
 
     - probe: the k coarse cells score against ALL queries in one
       broadcast cross product (k x q rows), per-qid exact count-ahead
-      ranking (``kmeans.ivf_probe_cells_batch``);
+      ranking (``kmeans.ivf_probe_cells_batch``, shared with
+      ``ivf_kmeans_topk``);
     - ADC: (qid, sub, cid, sd) — q x n_sub x k_sub rows, broadcast to
-      the candidate join, so the corpus-side scan still reads CODES
-      only, once, for every query simultaneously;
+      the candidate join, so the corpus-side scan reads CODES only,
+      never candidate vectors, once for every query simultaneously;
     - candidates: assigned x probe on cid fans each corpus code row
       out to only the queries probing its cell; the single corpus-wide
       exchange is the (qid, vec_id) score aggregation;
-    - rerank (default 50, the round-12 production setting): per-qid
-      shortlist via one window over the scored relation, exact integer
-      L2 against only the shortlisted vectors' real embeddings.
+    - rerank: per-qid shortlist via one window over the scored
+      relation, exact integer L2 against only the shortlisted vectors'
+      real embeddings.
 
-    Every decision is the same integer arithmetic as the single-query
-    form, so a qid's rows here match ``ivf_pq_topk(query_id=qid)``
-    bit-for-bit (property-tested), and the DuckDB oracle replays the
-    whole batch (queries/clustering.py q_ann_pq_batch).
+    The DuckDB oracles replay the whole pipeline (queries/clustering.py
+    q_ann_ivf_pq, q_ann_pq_rerank, q_ann_pq_batch).
 
     A query id absent from the corpus contributes no query vector and
-    therefore NO output rows (same as the single-query form returning
-    empty) — callers wanting a hard failure should validate ids
-    upstream; checking here would cost an action at plan time."""
+    therefore NO output rows — callers wanting a hard failure should
+    validate ids upstream; checking here would cost an action at plan
+    time."""
     from oic_options_chains_spark.operators.kmeans import (
         ivf_probe_cells_batch,
     )

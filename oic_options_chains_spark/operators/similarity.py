@@ -166,8 +166,8 @@ def tables_for(
 
 
 # bits resolved per DataFrame object, so repeated calls on the same input
-# (e.g. near_dup_pairs then ivf_topk over one embeddings table) pay the
-# sizing count() once. Weak keys: entries die with the DataFrame.
+# (e.g. near_dup_pairs then batch_topk_ivf over one embeddings table) pay
+# the sizing count() once. Weak keys: entries die with the DataFrame.
 _BITS_CACHE: weakref.WeakKeyDictionary[DataFrame, int] = weakref.WeakKeyDictionary()
 
 
@@ -200,16 +200,6 @@ def _probe_partitions(df: DataFrame) -> int:
         return int(raw)
     except ValueError:
         return spark.sparkContext.defaultParallelism
-
-
-def _ranked_topk(scored: DataFrame, order: list[Column], k: int) -> DataFrame:
-    """Global top-k with a rank column, WITHOUT a full-data
-    single-partition Window: sort-limit first (plans as
-    TakeOrderedAndProject — per-partition top-k, k-sized merge), then
-    rank the surviving k rows (the only single-partition stage left
-    touches k rows, not the corpus)."""
-    top = scored.orderBy(*order).limit(k)
-    return top.withColumn("rank", F.row_number().over(Window.orderBy(*order)))
 
 
 def _fold_sum(arr: Column) -> Column:
@@ -268,30 +258,6 @@ def sign_bucket(vec: Column, bits: int = 4) -> Column:
         for i in range(bits)
     ]
     return F.concat(*parts)
-
-
-def brute_force_topk(
-    embeddings: DataFrame,
-    query: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k by cosine against a single-row ``query(query_vec)`` DataFrame.
-
-    Returns (id, score_e6, rank). The query side is broadcast; ranking uses
-    the raw double score with the id as tie-break.
-    """
-    scored = embeddings.crossJoin(F.broadcast(query)).select(
-        F.col(id_col),
-        cosine(F.col(vec_col), F.col("query_vec")).alias("__cos"),
-    )
-    order = [F.col("__cos").desc(), F.col(id_col).asc()]
-    return _ranked_topk(scored, order, k).select(
-        id_col,
-        F.floor(F.lit(1e6) * F.col("__cos")).cast("bigint").alias("score_e6"),
-        F.col("rank").cast("int").alias("rank"),
-    )
 
 
 def near_dup_pairs(
@@ -657,35 +623,6 @@ def cross_near_pairs_banded(
     )
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    query: DataFrame,
-    k: int = 5,
-    bits: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Bucket-pruned top-k: only vectors in the query's sign bucket are
-    scored. Approximate (recall < 1) but scans 1/2^bits of the data.
-    ``bits`` defaults to ``bits_for(count)`` (bucket size tracks corpus
-    growth)."""
-    bits = _resolve_bits(embeddings, bits)
-    bucketed = embeddings.withColumn("__bucket", sign_bucket(F.col(vec_col), bits))
-    q = query.withColumn("__qbucket", sign_bucket(F.col("query_vec"), bits))
-    scored = bucketed.join(
-        F.broadcast(q), F.col("__bucket") == F.col("__qbucket")
-    ).select(
-        F.col(id_col),
-        cosine(F.col(vec_col), F.col("query_vec")).alias("__cos"),
-    )
-    order = [F.col("__cos").desc(), F.col(id_col).asc()]
-    return _ranked_topk(scored, order, k).select(
-        id_col,
-        F.floor(F.lit(1e6) * F.col("__cos")).cast("bigint").alias("score_e6"),
-        F.col("rank").cast("int").alias("rank"),
-    )
-
-
 def probe_buckets(vec: Column, bits: int = 4) -> Column:
     """Multi-probe bucket set: the exact sign bucket plus each one-bit
     flip — the IVF trick that recovers most recall lost to boundary
@@ -702,38 +639,28 @@ def probe_buckets(vec: Column, bits: int = 4) -> Column:
     return F.array(*probes)
 
 
-def ivf_multiprobe_topk(
-    embeddings: DataFrame,
-    query: DataFrame,
-    k: int = 5,
-    bits: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+def _topk_per_query(
+    scored: DataFrame, k: int, id_col: str, query_id_col: str
 ) -> DataFrame:
-    """Multi-probe IVF top-k: vectors in the query's bucket OR any one-bit
-    neighbor bucket are scored. The probe list is broadcast and exploded;
-    the join stays an equi-join on the bucket string, so at table scale
-    it is (bits+1) partition-pruned probes, never a scan. ``bits``
-    defaults to ``bits_for(count)``."""
-    bits = _resolve_bits(embeddings, bits)
-    bucketed = embeddings.withColumn("__bucket", sign_bucket(F.col(vec_col), bits))
-    probes = query.select(
-        F.col("query_vec"),
-        F.explode(probe_buckets(F.col("query_vec"), bits)).alias("__bucket"),
+    """(query_id_col, id_col, score_e6, rank): the ``k`` best ``__cos``
+    rows of each query, ties to the lowest id. Plans as a query-keyed
+    WindowGroupLimit (Partial per corpus partition, one exchange, Final)
+    — per-query state is k rows, never the score matrix. A one-query
+    relation whose id is a LITERAL loses the foldable partition key in
+    the optimizer and plans as TakeOrderedAndProject (per-partition
+    top-k, k-sized merge) with the rank window over the k survivors."""
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col("__cos").desc(), F.col(id_col).asc()
     )
-    # no dedup needed: probe_buckets yields bits+1 pairwise-distinct
-    # strings and each corpus row has exactly ONE sign bucket, so a row
-    # can match at most one probe — a distinct here would add a full
-    # shuffle over the largest intermediate for zero semantic effect
-    scored = bucketed.join(F.broadcast(probes), on="__bucket").select(
-        F.col(id_col),
-        cosine(F.col(vec_col), F.col("query_vec")).alias("__cos"),
-    )
-    order = [F.col("__cos").desc(), F.col(id_col).asc()]
-    return _ranked_topk(scored, order, k).select(
-        id_col,
-        F.floor(F.lit(1e6) * F.col("__cos")).cast("bigint").alias("score_e6"),
-        F.col("rank").cast("int").alias("rank"),
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            query_id_col,
+            id_col,
+            F.floor(F.lit(1e6) * F.col("__cos")).cast("bigint").alias("score_e6"),
+            F.col("rank").cast("int").alias("rank"),
+        )
     )
 
 
@@ -753,8 +680,8 @@ def batch_topk(
 
     The query batch is broadcast (queries are the small side by
     definition here); every corpus partition scores all queries locally,
-    then ONE query-keyed exchange feeds a WindowGroupLimit running top-k
-    — per-query state is k rows, never the full score matrix. At larger
+    then the per-query top-k (``_topk_per_query``) keeps k rows per
+    query. A single query is a one-row batch. At larger
     query batches the same plan degrades gracefully: the broadcast is
     the only piece to revisit (swap for an IVF bucket join when the
     batch itself stops fitting in memory).
@@ -766,19 +693,7 @@ def batch_topk(
         F.col(id_col),
         cosine(F.col(vec_col), F.col(query_vec_col)).alias("__cos"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("__cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            id_col,
-            F.floor(F.lit(1e6) * F.col("__cos")).cast("bigint").alias("score_e6"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _topk_per_query(scored, k, id_col, query_id_col)
 
 
 def batch_topk_ivf(
@@ -796,8 +711,8 @@ def batch_topk_ivf(
     so each corpus row is scored only against queries sharing its coarse
     bucket (~n_queries/2^bits instead of all of them), and the join key
     is the bucket — the corpus never shuffles when the query side
-    broadcasts. Recall matches single-probe IVF per query; compose with
-    neighbor-bucket probe expansion (cf. ivf_multiprobe_topk) when
+    broadcasts. Recall matches single-probe IVF per query;
+    ``batch_topk_multiprobe`` adds neighbor-bucket probe expansion when
     recall needs the extra buckets.
 
     Returns (query_id_col, id_col, score_e6, rank).
@@ -813,19 +728,7 @@ def batch_topk_ivf(
         F.col(id_col),
         cosine(F.col(vec_col), F.col(query_vec_col)).alias("__cos"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("__cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            id_col,
-            F.floor(F.lit(1e6) * F.col("__cos")).cast("bigint").alias("score_e6"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _topk_per_query(scored, k, id_col, query_id_col)
 
 
 def hard_negatives(
@@ -973,19 +876,7 @@ def batch_topk_multiprobe(
         F.col(id_col),
         cosine(F.col(vec_col), F.col(query_vec_col)).alias("__cos"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("__cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            id_col,
-            F.floor(F.lit(1e6) * F.col("__cos")).cast("bigint").alias("score_e6"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _topk_per_query(scored, k, id_col, query_id_col)
 
 
 def token_vectors(

@@ -518,24 +518,22 @@ def q_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, so the ranking is hash-exact across engines.
 
     rerank=None pins the DIAGNOSTIC ADC-only form this oracle replays;
-    the production retrieval default is ivf_pq_topk's rerank=50
+    the production retrieval default is ivf_pq_topk_batch's rerank=50
     (contracted by q_ann_pq_rerank)."""
-    from oic_options_chains_spark.operators.pq import ivf_pq_topk
+    from oic_options_chains_spark.operators.pq import ivf_pq_topk_batch
 
     e = _spread(load_table(spark, sf_dir, "embeddings"))
-    return ivf_pq_topk(
-        e, query_id=0, coarse_k=_K, n_probe=2, n_sub=_N_SUB,
+    return ivf_pq_topk_batch(
+        e, [0], coarse_k=_K, n_probe=2, n_sub=_N_SUB,
         k_sub=_K_SUB, iters=_ITERS, topk=5, rerank=None,
-    )
+    ).drop("qid")
 
 
-# --- q_ann_pq_rerank: QUEUED FOR r12 REGISTRATION -------------------------
-# (registry held at 219 this round per VERDICT r10 item 1; cross-engine
-# parity already proven by tests/test_round11_rerank_oracle.py). Same
-# IVF-ADC pipeline as q_ann_ivf_pq, plus the production accuracy stage:
-# the ADC pass returns a top-50 shortlist whose REAL vectors are exact-
-# re-ranked by quantized integer L2 — recall at sf2 measured 10000bp vs
-# the ADC-only 2666bp at ~equal cost (SCALE_CURVE q_ann_ivf_pq@rerank).
+# q_ann_pq_rerank: the IVF-ADC pipeline of q_ann_ivf_pq plus the
+# accuracy stage — the ADC pass returns a top-50 shortlist whose REAL
+# vectors are exact-re-ranked by quantized integer L2 (recall at sf2
+# 10000bp vs the ADC-only 2666bp at ~equal cost, SCALE_CURVE
+# q_ann_ivf_pq@rerank). Shared verbatim by q_ann_pq_served.
 
 ANN_PQ_RERANK_ORACLE = f"""
     {_kmeans_cte()}{_pq_cte()},
@@ -592,19 +590,19 @@ ANN_PQ_RERANK_ORACLE = f"""
 
 @register("q_ann_pq_rerank", oracle=ANN_PQ_RERANK_ORACLE)
 def q_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-ADC top-5 with exact re-rank (ivf_pq_topk(rerank=50)): the
+    """IVF-ADC top-5 with exact re-rank (ivf_pq_topk_batch(rerank=50)): the
     ADC stage's byte-cheap scan produces a 50-deep shortlist; only
     those 50 vectors are read and ranked by the exact quantized integer
     L2 (ties to the lowest id). Integer arithmetic end-to-end, so the
     oracle replays the whole pipeline — coarse probe, codebooks, ADC
     shortlist, exact re-rank — hash-exactly."""
-    from oic_options_chains_spark.operators.pq import ivf_pq_topk
+    from oic_options_chains_spark.operators.pq import ivf_pq_topk_batch
 
     e = _spread(load_table(spark, sf_dir, "embeddings"))
-    return ivf_pq_topk(
-        e, query_id=0, coarse_k=_K, n_probe=2, n_sub=_N_SUB,
+    return ivf_pq_topk_batch(
+        e, [0], coarse_k=_K, n_probe=2, n_sub=_N_SUB,
         k_sub=_K_SUB, iters=_ITERS, topk=5, rerank=50,
-    )
+    ).drop("qid")
 
 
 # the serving shape: ONE fit, a SET of queries. The oracle generalizes
@@ -678,7 +676,7 @@ def q_ann_pq_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     must not include the fit). Coarse probe, ADC tables, shortlist and
     exact re-rank all key on qid; the corpus-side scan reads codes
     only, ONCE, for every query simultaneously. Integer end-to-end —
-    each qid's rows match ivf_pq_topk(query_id=qid) bit-for-bit
+    each qid's rows equal that qid run alone as a one-query batch
     (property: tests/test_round12_batch.py) and the oracle replays the
     whole batch."""
     from oic_options_chains_spark.operators.pq import ivf_pq_topk_batch
@@ -692,12 +690,12 @@ def q_ann_pq_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("q_ann_pq_served", oracle=ANN_PQ_RERANK_ORACLE)
 def q_ann_pq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-ADC top-5 against a MATERIALIZED index (round 13 — the other
-    half of the serving story q_ann_pq_batch started): the coarse
+    """IVF-ADC top-5 against a MATERIALIZED index (the other half of
+    the serving story q_ann_pq_batch covers): the coarse
     assignment, centroid moments, PQ codes and codebooks are trained
     once per corpus epoch (pq.materialize_ivf_pq_index via the shared
     sources/epoch cache) and every query after that is
-    ivf_pq_topk(index=...) — per-query work is the broadcast probe,
+    ivf_pq_topk_batch(index=...) — per-query work is the broadcast probe,
     the 128-row ADC table, a code scan of the probed cells and the
     50-row exact re-rank; NO k-means runs at query time. Fits are
     deterministic, so this key shares q_ann_pq_rerank's oracle
@@ -705,7 +703,7 @@ def q_ann_pq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from oic_options_chains_spark.operators.pq import (
-        ivf_pq_topk,
+        ivf_pq_topk_batch,
         materialize_ivf_pq_index,
         read_ivf_pq_index,
     )
@@ -721,7 +719,9 @@ def q_ann_pq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     idx = read_ivf_pq_index(spark, path)
     # no fit params here: subspace structure travels with the artifact
-    return ivf_pq_topk(e, query_id=0, n_probe=2, topk=5, rerank=50, index=idx)
+    return ivf_pq_topk_batch(
+        e, [0], n_probe=2, topk=5, rerank=50, index=idx
+    ).drop("qid")
 
 
 @register(

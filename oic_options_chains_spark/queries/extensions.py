@@ -22,8 +22,9 @@ from oic_options_chains_spark.operators.minhash import (
     oph_signatures,
 )
 from oic_options_chains_spark.operators.similarity import (
-    brute_force_topk,
-    ivf_topk,
+    batch_topk,
+    batch_topk_ivf,
+    batch_topk_multiprobe,
     near_dup_pairs,
 )
 from oic_options_chains_spark.operators.text import (
@@ -808,6 +809,16 @@ _COS_SQL = """
 """
 
 
+def _one_query(e: DataFrame) -> DataFrame:
+    """The vec_id=0 vector as a one-row query batch (query_id,
+    query_vec). The query id is a LITERAL, so the optimizer drops the
+    per-query window's foldable partition key and the batch top-k plans
+    as TakeOrderedAndProject (per-partition top-k, k-sized merge)."""
+    return e.filter(F.col("vec_id") == 0).select(
+        F.lit(0).alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+
+
 @register(
     "q_ann_cosine",
     oracle=f"""
@@ -827,8 +838,7 @@ _COS_SQL = """
 def q_ann_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 against the vec_id=0 query vector."""
     e = load_table(spark, sf_dir, "embeddings")
-    query = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("query_vec"))
-    return brute_force_topk(e, query, k=10)
+    return batch_topk(e, _one_query(e), k=10).drop("query_id")
 
 
 @register(
@@ -852,8 +862,6 @@ def q_ann_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched retrieval: cosine top-3 per query for a 5-vector query
     batch in one plan — one broadcast, one query-keyed WindowGroupLimit."""
-    from oic_options_chains_spark.operators.similarity import batch_topk
-
     e = load_table(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -894,8 +902,6 @@ _QBUCKET_SQL = """
 def q_ann_batch_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucket-join batched retrieval: each corpus row scored only against
     the queries sharing its sign bucket — batch ANN's scale form."""
-    from oic_options_chains_spark.operators.similarity import batch_topk_ivf
-
     e = load_table(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -935,8 +941,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style sign-bucket-pruned cosine top-5: the scale path — only the
     query's coarse bucket is scanned."""
     e = load_table(spark, sf_dir, "embeddings")
-    query = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("query_vec"))
-    return ivf_topk(e, query, k=5, bits=4)
+    return batch_topk_ivf(e, _one_query(e), k=5, bits=4).drop("query_id")
 
 
 @register(
@@ -971,11 +976,8 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe IVF cosine top-5: the query's bucket plus every one-bit
     neighbor — recall recovery at (bits+1)/2^bits scan cost."""
-    from oic_options_chains_spark.operators.similarity import ivf_multiprobe_topk
-
     e = load_table(spark, sf_dir, "embeddings")
-    query = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("query_vec"))
-    return ivf_multiprobe_topk(e, query, k=5, bits=4)
+    return batch_topk_multiprobe(e, _one_query(e), k=5, bits=4).drop("query_id")
 
 
 @register(
@@ -1082,11 +1084,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors the bucket pruning kept. Inputs are the two retrieval
     operators' own k-row outputs, so the eval itself is queries x k
     sized."""
-    from oic_options_chains_spark.operators.similarity import (
-        ann_recall,
-        batch_topk,
-        batch_topk_ivf,
-    )
+    from oic_options_chains_spark.operators.similarity import ann_recall
 
     e = load_table(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 5).select(
@@ -1152,11 +1150,7 @@ def q_ann_recall_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus its four Hamming-1 neighbors scans 5/16 of the corpus and
     recovers the recall single-probe leaves on bucket boundaries (the
     lift the pair of queries quantifies)."""
-    from oic_options_chains_spark.operators.similarity import (
-        ann_recall,
-        batch_topk,
-        batch_topk_multiprobe,
-    )
+    from oic_options_chains_spark.operators.similarity import ann_recall
 
     e = load_table(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 5).select(
@@ -1241,14 +1235,10 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from oic_options_chains_spark.operators.ranking import bm25_components
-    from oic_options_chains_spark.operators.similarity import brute_force_topk
 
     e = load_table(spark, sf_dir, "embeddings")
     d = load_table(spark, sf_dir, "documents")
-    query = e.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("query_vec")
-    )
-    dense = brute_force_topk(e, query, k=20).select(
+    dense = batch_topk(e, _one_query(e), k=20).select(
         F.col("vec_id").alias("id"), F.col("rank").alias("rd")
     )
     sscore = (
@@ -1505,11 +1495,7 @@ def q_ann_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning, this asks where the one right answer landed (rr_e6 =
     floor(1e6/rank), 0 when pruning lost it). Exact integer rationals,
     one queries-sized join."""
-    from oic_options_chains_spark.operators.similarity import (
-        batch_topk,
-        batch_topk_ivf,
-        mrr_of_true_nearest,
-    )
+    from oic_options_chains_spark.operators.similarity import mrr_of_true_nearest
 
     e = load_table(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 5).select(

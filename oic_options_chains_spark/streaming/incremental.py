@@ -51,12 +51,16 @@ def _distinct_days(batch: DataFrame, col: str) -> list:
 
     BOUNDED collect: cardinality is the number of distinct DATES in one
     micro-batch, never its row count — the one shape of driver-side
-    iteration this codebase allows. The limit+assert is a tripwire so
+    iteration this codebase allows. The limit+raise is a tripwire so
     the pattern cannot be copied onto an unbounded key unnoticed."""
     rows = (
         batch.select(col).distinct().limit(_MAX_DAYS_PER_BATCH + 1).collect()
     )
-    assert len(rows) <= _MAX_DAYS_PER_BATCH, f"{col} cardinality exceeds day bound"
+    if len(rows) > _MAX_DAYS_PER_BATCH:
+        raise ValueError(
+            f"micro-batch spans >{_MAX_DAYS_PER_BATCH} distinct {col} values "
+            "— split the backfill into smaller drains"
+        )
     return sorted(r[0] for r in rows if r[0] is not None)
 
 

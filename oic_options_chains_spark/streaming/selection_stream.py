@@ -43,6 +43,10 @@ from oic_options_chains_spark.operators.dsir import (
 
 _STATS_SCHEMA = "bucket int, c_raw bigint, c_tgt bigint"
 
+# compact_model folds the model through the driver: at most this many
+# bucket rows (2^16; the default DSIR_BUCKETS is 256)
+_MAX_MODEL_BUCKETS = 65_536
+
 
 def write_batch_stats(
     batch: DataFrame,
@@ -180,9 +184,18 @@ def compact_model(spark: SparkSession, model_dir: str) -> None:
         if n.startswith("batch=")
     ]
     # model-sized driver round-trip (<= n_buckets rows), tripwired like
-    # the other audited bounded collects (SCALING.md ground rules)
-    stats = read_model_stats(spark, model_dir).limit(65537).collect()
-    assert len(stats) <= 65536, "bucket count exceeds the model-size bound"
+    # the other audited bounded collects (SCALING.md ground rules); the
+    # raise comes before any write, so an oversized model stays intact
+    stats = (
+        read_model_stats(spark, model_dir)
+        .limit(_MAX_MODEL_BUCKETS + 1)
+        .collect()
+    )
+    if len(stats) > _MAX_MODEL_BUCKETS:
+        raise ValueError(
+            f"model has >{_MAX_MODEL_BUCKETS} buckets — too large to compact "
+            "through the driver; keep its batch= partials uncompacted"
+        )
     nxt = 0 if comp is None else comp[0] + 1
     spark.createDataFrame(
         [(r.bucket, r.c_raw, r.c_tgt) for r in stats], _STATS_SCHEMA

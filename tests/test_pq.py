@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 from oic_options_chains_spark.operators.kmeans import quantize
 from oic_options_chains_spark.operators.pq import (
     ADC_SHIFT,
-    adc_table,
-    ivf_pq_topk,
+    adc_table_batch,
+    ivf_pq_topk_batch,
     pq_fit,
 )
 from oic_options_chains_spark.sources.registry import load_table
@@ -72,9 +72,13 @@ def test_adc_scores_bound_exact_distance(spark, sf_dir):
     the exact rational floor computed in Python."""
     e = load_table(spark, sf_dir, "embeddings").limit(40)
     qv = quantize(e)
-    qrow = qv.filter(F.col("vec_id") == 0).select(F.col("qarr").alias("q_qarr"))
+    qrow = qv.filter(F.col("vec_id") == 0).select(
+        F.col("vec_id").alias("qid"), F.col("qarr").alias("q_qarr")
+    )
     _, codebooks = pq_fit(e, n_sub=N_SUB, k_sub=K_SUB, iters=1)
-    adc = {(r.sub, r.cid): r.sd for r in adc_table(codebooks, qrow).collect()}
+    rows = adc_table_batch(codebooks, qrow).collect()
+    assert {r.qid for r in rows} == {0}
+    adc = {(r.sub, r.cid): r.sd for r in rows}
     q = qv.filter(F.col("vec_id") == 0).collect()[0].qarr
     for r in codebooks.collect():
         sq = q[r.sub * SUB_DIM : (r.sub + 1) * SUB_DIM]
@@ -86,7 +90,8 @@ def test_adc_scores_bound_exact_distance(spark, sf_dir):
 
 def test_ivf_pq_returns_ranked_topk(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
-    out = ivf_pq_topk(e, query_id=0, topk=5).collect()
+    out = ivf_pq_topk_batch(e, [0], topk=5).collect()
+    assert {r.qid for r in out} == {0}
     assert len(out) == 5
     assert [r.rank for r in sorted(out, key=lambda r: r.rank)] == [1, 2, 3, 4, 5]
     by_rank = sorted(out, key=lambda r: r.rank)

@@ -199,7 +199,7 @@ def test_carry_struct_is_atomic_across_null_attributes(spark):
 @settings(max_examples=8, deadline=None)
 @given(seed=st.integers(0, 10**6))
 def test_asof_join_strategies_agree(spark, seed):
-    """asof_join(strategy='merge') == strategy='pairs' on random keyed
+    """asof_join_union == asof_join (the pairs plan) on random keyed
     data including NULL right times (which never match in either form)
     and exact right-time ties."""
     rng = random.Random(seed)
@@ -221,9 +221,14 @@ def test_asof_join_strategies_agree(spark, seed):
         ],
         "k string, rt long, v long",
     )
-    kwargs = dict(
-        on=["k"], left_time="t", right_time="rt", tiebreak=("v",), how="left"
+    pairs = asof_join(
+        left, right, on=["k"], left_time="t", right_time="rt",
+        tiebreak=("v",), how="left",
     )
-    pairs = asof_join(left, right, **kwargs)
-    merge = asof_join(left, right, strategy="merge", **kwargs)
+    # the union form carries every non-key, non-time right column: keep
+    # rt through an alias and drop the NULL right times up front
+    r2 = right.filter(F.col("rt").isNotNull()).withColumn("__rt", F.col("rt"))
+    merge = asof_join_union(
+        left, r2, ["k"], "t", "__rt", tiebreak=("v",), how="left"
+    )
     assert _rows(merge.select(*pairs.columns)) == _rows(pairs)

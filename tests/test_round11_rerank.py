@@ -1,4 +1,4 @@
-"""ivf_pq_topk(rerank=R) — the ADC-shortlist + exact-re-rank accuracy
+"""ivf_pq_topk_batch(rerank=R) — the ADC-shortlist + exact-re-rank accuracy
 stage: with every coarse cell probed and a corpus-wide shortlist the
 result must EQUAL the exact quantized-integer-L2 top-k (the ADC
 approximation fully absorbed), and rank/score must be the exact
@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from oic_options_chains_spark.operators.pq import ivf_pq_topk
+from oic_options_chains_spark.operators.pq import ivf_pq_topk_batch
 from oic_options_chains_spark.sources.registry import load_table
 
 from tests.conftest import SF_DIR
@@ -54,8 +54,8 @@ def _exact_topk(e, qid, k):
 
 
 def test_full_probe_full_shortlist_rerank_is_exact(spark, emb):
-    got = ivf_pq_topk(
-        emb, query_id=0, coarse_k=4, n_probe=4, n_sub=8, k_sub=8,
+    got = ivf_pq_topk_batch(
+        emb, [0], coarse_k=4, n_probe=4, n_sub=8, k_sub=8,
         iters=2, topk=5, rerank=10**6,
     ).collect()
     want = _exact_topk(emb, 0, 5)
@@ -65,8 +65,8 @@ def test_full_probe_full_shortlist_rerank_is_exact(spark, emb):
 
 
 def test_rerank_never_returns_more_than_topk_and_ranks_densely(spark, emb):
-    got = ivf_pq_topk(
-        emb, query_id=3, coarse_k=4, n_probe=2, n_sub=8, k_sub=8,
+    got = ivf_pq_topk_batch(
+        emb, [3], coarse_k=4, n_probe=2, n_sub=8, k_sub=8,
         iters=2, topk=5, rerank=20,
     ).collect()
     assert len(got) == 5
@@ -79,9 +79,9 @@ def test_rerank_recall_at_least_plain_adc(spark, emb):
     """On the same probe set, exact-re-ranking an R>topk shortlist can
     only improve (or tie) recall vs trusting ADC order directly."""
     want = {r.vec_id for r in _exact_topk(emb, 7, 5)}
-    kw = dict(
-        query_id=7, coarse_k=4, n_probe=4, n_sub=8, k_sub=8, iters=2, topk=5
-    )
-    plain = {r.vec_id for r in ivf_pq_topk(emb, rerank=None, **kw).collect()}
-    rr = {r.vec_id for r in ivf_pq_topk(emb, rerank=40, **kw).collect()}
+    kw = dict(coarse_k=4, n_probe=4, n_sub=8, k_sub=8, iters=2, topk=5)
+    plain = {
+        r.vec_id for r in ivf_pq_topk_batch(emb, [7], rerank=None, **kw).collect()
+    }
+    rr = {r.vec_id for r in ivf_pq_topk_batch(emb, [7], rerank=40, **kw).collect()}
     assert len(rr & want) >= len(plain & want)

@@ -186,7 +186,7 @@ def test_minhash_registered_key_uses_cache_once(
 def test_ivf_pq_index_path_equals_inline_fit(spark, sf_dir, tmp_path):
     from oic_options_chains_spark.operators.pq import (
         ivf_pq_fit_index,
-        ivf_pq_topk,
+        ivf_pq_topk_batch,
         materialize_ivf_pq_index,
         read_ivf_pq_index,
     )
@@ -194,13 +194,13 @@ def test_ivf_pq_index_path_equals_inline_fit(spark, sf_dir, tmp_path):
 
     e = load_table(spark, sf_dir, "embeddings")
     want = {
-        tuple(r) for r in ivf_pq_topk(e, query_id=0, rerank=50).collect()
+        tuple(r) for r in ivf_pq_topk_batch(e, [0], rerank=50).collect()
     }
     # in-memory index
     idx = ivf_pq_fit_index(e)
     got = {
         tuple(r)
-        for r in ivf_pq_topk(e, query_id=0, rerank=50, index=idx).collect()
+        for r in ivf_pq_topk_batch(e, [0], rerank=50, index=idx).collect()
     }
     assert got == want and got
     # parquet round-trip: bit-exact (integer moments end-to-end)
@@ -209,17 +209,17 @@ def test_ivf_pq_index_path_equals_inline_fit(spark, sf_dir, tmp_path):
     stored = read_ivf_pq_index(spark, path)
     got2 = {
         tuple(r)
-        for r in ivf_pq_topk(e, query_id=0, rerank=50, index=stored).collect()
+        for r in ivf_pq_topk_batch(e, [0], rerank=50, index=stored).collect()
     }
     assert got2 == want
     # ...and for the diagnostic ADC-only form too
     want_adc = {
-        tuple(r) for r in ivf_pq_topk(e, query_id=0, rerank=None).collect()
+        tuple(r) for r in ivf_pq_topk_batch(e, [0], rerank=None).collect()
     }
     got_adc = {
         tuple(r)
-        for r in ivf_pq_topk(
-            e, query_id=0, rerank=None, index=stored
+        for r in ivf_pq_topk_batch(
+            e, [0], rerank=None, index=stored
         ).collect()
     }
     assert got_adc == want_adc
@@ -228,13 +228,13 @@ def test_ivf_pq_index_path_equals_inline_fit(spark, sf_dir, tmp_path):
 def test_ivf_pq_index_schema_check(spark, sf_dir):
     import pytest
 
-    from oic_options_chains_spark.operators.pq import IvfPqIndex, ivf_pq_topk
+    from oic_options_chains_spark.operators.pq import IvfPqIndex, ivf_pq_topk_batch
     from oic_options_chains_spark.sources.registry import load_table
 
     e = load_table(spark, sf_dir, "embeddings")
     bad = IvfPqIndex(assigned=e, centroids=e, codes=e, codebooks=e)
     with pytest.raises(ValueError, match="contract columns"):
-        ivf_pq_topk(e, query_id=0, index=bad)
+        ivf_pq_topk_batch(e, [0], index=bad)
 
 
 def test_served_key_builds_once_and_matches_rerank_key(

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from oic_options_chains_spark.operators.dsir import (
@@ -137,3 +138,24 @@ def test_fresh_model_dir_reads_as_defined_empty_model(spark, tmp_path):
     assert read_model_stats(spark, model).collect() == []
     compact_model(spark, model)  # no-op base, must not raise
     assert read_model_stats(spark, model).collect() == []
+
+
+def test_oversized_model_compaction_raises_and_keeps_partials(
+    spark, tmp_path, monkeypatch
+):
+    """The model-size bound holds under ``python -O`` too: a model with
+    more buckets than the driver-side fold allows raises ValueError
+    before anything is written or deleted, so the batch partials (the
+    whole model) survive."""
+    import oic_options_chains_spark.streaming.selection_stream as ss
+
+    model = str(tmp_path / "model")
+    write_batch_stats(
+        spark.createDataFrame(_docs(0, 50), SCHEMA), _tgt(), model, batch_id=0
+    )
+    before = sorted(map(tuple, read_model_stats(spark, model).collect()))
+    monkeypatch.setattr(ss, "_MAX_MODEL_BUCKETS", len(before) - 1)
+    with pytest.raises(ValueError, match="buckets"):
+        compact_model(spark, model)
+    assert sorted(os.listdir(model)) == ["batch=0"]
+    assert sorted(map(tuple, read_model_stats(spark, model).collect())) == before

@@ -211,3 +211,19 @@ def test_available_now_weeklies(spark, tmp_path):
     assert state["AAPL"].last_seen == dt.date(2025, 8, 19)
     assert state["BRK.B"].last_seen == dt.date(2025, 8, 18)  # untouched
     assert streamed(load_weeklies(day1, batch_rows(dt.date(2025, 8, 19))))
+
+
+def test_day_bound_raises_under_any_optimization_level(spark, monkeypatch):
+    """The micro-batch day bound is a raise, not an assert, so it holds
+    under ``python -O``: one day over the bound fails loudly; at the
+    bound the days come back sorted."""
+    import oic_options_chains_spark.streaming.incremental as inc
+
+    batch = spark.createDataFrame(
+        [(DAY2,), (DAY1,), (DAY2,)], "ingest_date date"
+    )
+    monkeypatch.setattr(inc, "_MAX_DAYS_PER_BATCH", 2)
+    assert inc._distinct_days(batch, "ingest_date") == [DAY1, DAY2]
+    monkeypatch.setattr(inc, "_MAX_DAYS_PER_BATCH", 1)
+    with pytest.raises(ValueError, match="split the backfill"):
+        inc._distinct_days(batch, "ingest_date")

@@ -172,7 +172,7 @@ def _ann_ivf_pq_scaled(spark, sf_dir):
     probe fraction held constant, 64-codeword sub-quantizers. The
     paired recall probe shows whether the knobs recover the pinned
     form's measured recall decay."""
-    from oic_options_chains_spark.operators.pq import ivf_pq_topk
+    from oic_options_chains_spark.operators.pq import ivf_pq_topk_batch
     from oic_options_chains_spark.queries.clustering import (
         _ITERS,
         _N_SUB,
@@ -185,19 +185,19 @@ def _ann_ivf_pq_scaled(spark, sf_dir):
 
     e = _spread(load_table(spark, sf_dir, "embeddings"))
     kw = _pq_scaled_params(table_row_count(sf_dir, "embeddings"))
-    return ivf_pq_topk(  # kw carries rerank=None (ADC-only twin)
-        e, query_id=0, n_sub=_N_SUB, iters=_ITERS, topk=5, **kw
-    )
+    return ivf_pq_topk_batch(  # kw carries rerank=None (ADC-only twin)
+        e, [0], n_sub=_N_SUB, iters=_ITERS, topk=5, **kw
+    ).drop("qid")
 
 
 def _ann_ivf_pq_rerank(spark, sf_dir):
     """q_ann_ivf_pq's operator at the ORACLE-PINNED parameters plus the
     production accuracy stage: ADC top-50 shortlist exact-re-ranked
-    (ivf_pq_topk(rerank=50)). Separates the two decay sources — the
+    (ivf_pq_topk_batch(rerank=50)). Separates the two decay sources — the
     shortlist absorbs quantization misranking inside probed cells at
     the cost of reading 50 real vectors per query; any residual recall
     loss is coarse-cell pruning."""
-    from oic_options_chains_spark.operators.pq import ivf_pq_topk
+    from oic_options_chains_spark.operators.pq import ivf_pq_topk_batch
     from oic_options_chains_spark.queries.clustering import (
         _ITERS,
         _K,
@@ -208,10 +208,10 @@ def _ann_ivf_pq_rerank(spark, sf_dir):
     from oic_options_chains_spark.sources.registry import load_table
 
     e = _spread(load_table(spark, sf_dir, "embeddings"))
-    return ivf_pq_topk(
-        e, query_id=0, coarse_k=_K, n_probe=2, n_sub=_N_SUB, k_sub=_K_SUB,
+    return ivf_pq_topk_batch(
+        e, [0], coarse_k=_K, n_probe=2, n_sub=_N_SUB, k_sub=_K_SUB,
         iters=_ITERS, topk=5, rerank=50,
-    )
+    ).drop("qid")
 
 
 def _decontam_top1(hits):
@@ -361,18 +361,18 @@ def _recall_ann_pq(spark, sf_dir, params=None) -> int:
     """Mean recall@5 of the full IVF-ADC path (q_ann_ivf_pq's operator:
     2-of-8 coarse probe + product-quantized scoring) against the exact
     integer-L2 top-5 over the same spread table, averaged over three
-    query ids (each ivf_pq_topk call re-fits, so the sample is small by
-    design). Absolute recall is LOW at the oracle-pinned bench
+    query ids (each one-query ivf_pq_topk_batch call re-fits, so the
+    sample is small by design). Absolute recall is LOW at the oracle-pinned bench
     parameters (8 sub-quantizers x 16 codewords over 2k-50k vectors is
     deliberately coarse so the oracle replay stays cheap) — the curve's
     job is detecting DECAY as the corpus grows, not grading the pinned
-    codebook size. ``params`` (n -> ivf_pq_topk kwargs) measures a
+    codebook size. ``params`` (n -> ivf_pq_topk_batch kwargs) measures a
     scale-knob variant against the same exact ground truth."""
     from oic_options_chains_spark.sources.registry import table_row_count
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from oic_options_chains_spark.operators.pq import ivf_pq_topk
+    from oic_options_chains_spark.operators.pq import ivf_pq_topk_batch
     from oic_options_chains_spark.queries.clustering import (
         _ITERS,
         _K,
@@ -406,8 +406,8 @@ def _recall_ann_pq(spark, sf_dir, params=None) -> int:
         coarse_k=_K, n_probe=2, k_sub=_K_SUB, rerank=None
     )
     for qid in query_ids:
-        approx = ivf_pq_topk(
-            e, query_id=qid, n_sub=_N_SUB, iters=_ITERS, topk=5, **kw
+        approx = ivf_pq_topk_batch(
+            e, [qid], n_sub=_N_SUB, iters=_ITERS, topk=5, **kw
         ).select("vec_id")
         q = e.filter(F.col("vec_id") == qid).select(
             F.col("embedding").alias("qv")
